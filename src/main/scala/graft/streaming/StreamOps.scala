@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -318,14 +319,29 @@ object StreamOps {
     * the state read surface would serve partial sums, and (defensively)
     * a merge must never chain off one. The chaos spec in StreamOpsSpec
     * pins this by planting exactly such a directory. */
-  private[graft] def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
+  private[graft] def committedVersions(fs: FileSystem,
+      root: Path): Seq[Long] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(_.getPath.getName.startsWith("v="))
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
       .map(_.getPath.getName.drop(2).toLong)
+
+  /** The newest committed version under `root` at or below `upTo`: the
+    * one lookup every version-chain reader and writer goes through. */
+  private def newestCommitted(fs: FileSystem, root: Path,
+      upTo: Long = Long.MaxValue): Option[Long] =
+    committedVersions(fs, root).filter(_ <= upTo).sorted.lastOption
+
+  /** The version a SEEDED chain's batch N reads: the newest committed
+    * v ≤ N. The base seed v=0 is written before the stream starts and
+    * batch N writes v=N+1, so a replay never chains off its own output
+    * and finding nothing means the seed is missing. */
+  private[graft] def seededVersion(fs: FileSystem, statePath: String,
+      batchId: Long): Long =
+    newestCommitted(fs, new Path(statePath), batchId).getOrElse(
+      sys.error(s"no committed index version <= $batchId under " +
+        s"$statePath — the base seed (v=0) is missing"))
 
   /** Output-file sizing for a state-version write (r15, guide §6
     * "sensible output file sizing" / small-files): the write coalesces
@@ -348,9 +364,8 @@ object StreamOps {
     * their medians). The repartition exchange keeps upstream compute at
     * its natural width and moves only the KB-scale result to the one
     * writer. */
-  private def sizedForState(df: DataFrame,
-      fs: org.apache.hadoop.fs.FileSystem,
-      sources: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
+  private def sizedForState(df: DataFrame, fs: FileSystem,
+      sources: Seq[Path]): DataFrame = {
     val target = df.sparkSession.conf
       .get("spark.graft.stateFileBytes", (64L * 1024 * 1024).toString)
       .toLong
@@ -375,20 +390,12 @@ object StreamOps {
   private def mergeDeltaInto(delta: DataFrame, batchId: Long,
       statePath: String): Unit = {
     val spark = delta.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevVersion = committedVersions(fs, root)
-      .filter(_ < batchId) // replay must NOT read its own prior output
-      .sorted.lastOption
-    val prev = prevVersion match {
-      case Some(v) => spark.read.parquet(s"$statePath/v=$v")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, n BIGINT, cents BIGINT"))
-    }
+    val fs = hadoopFs(spark, statePath)
+    val root = new Path(statePath)
+    // replay must NOT read its own prior output
+    val prevVersion = newestCommitted(fs, root, batchId - 1)
+    val prev = prevVersion
+      .fold(emptyMergeState(spark))(v => spark.read.parquet(s"$statePath/v=$v"))
     val merged = prev
       .select(col("user_id").as("pk"), col("n"), col("cents"))
       .join(delta, col("pk") === col("user_id"), "full_outer")
@@ -398,8 +405,8 @@ object StreamOps {
           .cast("long").as("n"),
         (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
           .cast("long").as("cents"))
-    sizedForState(merged, fs, prevVersion.toSeq.map(v =>
-        new org.apache.hadoop.fs.Path(s"$statePath/v=$v")))
+    sizedForState(merged, fs,
+        prevVersion.toSeq.map(v => new Path(s"$statePath/v=$v")))
       .write.mode("overwrite").parquet(s"$statePath/v=$batchId")
     // prune: keep the newest 3 versions ≤ batchId (replay of batch N needs
     // newest v < N alive); growth was one full state copy per micro-batch
@@ -408,7 +415,7 @@ object StreamOps {
       .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
       .sorted.reverse
     keep.drop(3).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v=$v"), true)
+      fs.delete(new Path(s"$statePath/v=$v"), true)
     }
   }
 
@@ -483,26 +490,24 @@ object StreamOps {
     * surface serves the bucket's previous committed version until the
     * replayed batch rewrites the torn one (chaos-spec-pinned). */
   def readBucketedState(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val fs = hadoopFs(spark, statePath)
+    val root = new Path(statePath)
     val newest =
       if (!fs.exists(root)) Seq.empty[String]
       else fs.listStatus(root).toSeq
         .map(_.getPath)
         .filter(_.getName.startsWith("bucket="))
-        .flatMap { b =>
-          committedVersions(fs, b)
-            .sorted.lastOption
-            .map(v => s"$b/v=$v")
-        }
-    if (newest.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, n BIGINT, cents BIGINT"))
+        .flatMap(b => newestCommitted(fs, b).map(v => s"$b/v=$v"))
+    if (newest.isEmpty) emptyMergeState(spark)
     else spark.read.parquet(newest: _*)
   }
+
+  /** The merge state before any batch: (user_id, n, cents), no rows. */
+  private def emptyMergeState(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id BIGINT, n BIGINT, cents BIGINT"))
 
   final case class TypedEv(user_id: Long, event_type: String, ts: Timestamp)
 
@@ -759,13 +764,11 @@ object StreamOps {
   private[graft] def scratchRoot(s: SparkSession): String =
     s.conf.get("spark.graft.scratchRoot", "/tmp")
 
-  private def hadoopFs(s: SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      s.sessionState.newHadoopConf())
+  private def hadoopFs(s: SparkSession, path: String): FileSystem =
+    FileSystem.get(new java.net.URI(path), s.sessionState.newHadoopConf())
 
   private def deletePath(s: SparkSession, path: String): Unit = {
-    hadoopFs(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    hadoopFs(s, path).delete(new Path(path), true)
     ()
   }
 
@@ -775,9 +778,7 @@ object StreamOps {
   private def deleteAtExit(s: SparkSession, path: String): Unit = {
     val conf = s.sessionState.newHadoopConf()
     sys.addShutdownHook {
-      org.apache.hadoop.fs.FileSystem
-        .get(new java.net.URI(path), conf)
-        .delete(new org.apache.hadoop.fs.Path(path), true)
+      FileSystem.get(new java.net.URI(path), conf).delete(new Path(path), true)
       ()
     }
     ()
@@ -880,7 +881,7 @@ object StreamOps {
     // table is a DIRECTORY and is streamed directly — a glob against
     // it would silently list zero files (ADVICE r10 #1)
     val isDir = hadoopFs(s, evPath)
-      .getFileStatus(new org.apache.hadoop.fs.Path(evPath)).isDirectory
+      .getFileStatus(new Path(evPath)).isDirectory
     val src =
       if (isDir) s.readStream.schema(schema).parquet(evPath)
       else s.readStream.schema(schema)
@@ -905,48 +906,123 @@ object StreamOps {
     * version under `statePath` (torn versions invisible — same
     * `_SUCCESS`-gated rule the merge itself chains by). */
   def readMergedState(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
-    val v = committedVersions(fs,
-      new org.apache.hadoop.fs.Path(statePath)).sorted.lastOption
+    val v = newestCommitted(hadoopFs(spark, statePath), new Path(statePath))
       .getOrElse(sys.error(s"no committed merge state under $statePath"))
     spark.read.parquet(s"$statePath/v=$v")
   }
 
-  /** One split of the events table into 4 parquet files per sfDir, so
-    * the file source delivers a genuine MULTI-batch stream
-    * (maxFilesPerTrigger=1 → 4 micro-batches, 4 chained merge steps)
-    * instead of collapsing the whole table into one batch. Built once
-    * per sfDir per JVM — the final merged state is batching-invariant
-    * (per-user sums are associative), which is exactly what the oracle
-    * gate checks. */
+  /** Per-JVM split dirs, one per (kind, scratchRoot, sfDir): the
+    * streams every registered chain replays are built once and deleted
+    * at JVM exit. Per-key memoized build (ADVICE r10 #4):
+    * `computeIfAbsent` runs the Spark split job under the KEY's bin lock
+    * only, so concurrent first-touches of different sfDirs (or scratch
+    * roots) build in parallel instead of serializing on a global
+    * monitor; two racing first-touches of the SAME key still share one
+    * build. */
   private val splitCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Per-key memoized build (ADVICE r10 #4): `computeIfAbsent` runs the
-    * Spark split job under the KEY's bin lock only, so concurrent
-    * first-touches of different sfDirs (or scratch roots) build in
-    * parallel instead of serializing on a global monitor; two racing
-    * first-touches of the SAME key still share one build. */
-  private def eventsSplit(s: SparkSession, d: String): String =
-    splitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      val p = s"${scratchRoot(s)}/graft_stream_split_" +
+  private def cachedSplit(s: SparkSession, d: String, kind: String)(
+      build: String => Unit): String =
+    splitCache.computeIfAbsent(s"$kind|${scratchRoot(s)}|$d", _ => {
+      val dir = s"${scratchRoot(s)}/graft_${kind}_split_" +
         java.util.UUID.randomUUID()
-      graft.io.Tables.load(s, d, "events").select("user_id", "value")
-        .repartition(4).write.mode("overwrite").parquet(p)
-      // scratch: reused for the whole JVM, deleted at exit
-      deleteAtExit(s, p)
-      p
+      build(dir)
+      dir
     })
 
-  /** Drive one merge-sink flavor over the 4-file micro-batch stream,
-    * read its final state, and CLEAN UP the run's scratch: state and
-    * checkpoint dirs are per-invocation (globally UUID-unique — a
-    * reused checkpoint from an earlier process would resume ITS
-    * file-source log instead of streaming this split), so repeated
-    * bench/verify runs must not grow /tmp without bound. The state is
-    * localCheckpointed into block storage BEFORE deletion so the
-    * returned frame stays valid. */
+  /** The ordered split writer: each frame of `files` becomes ONE parquet
+    * file `<dir>/<name>_<k>.parquet` (tmp write, then rename), with
+    * modification times 60 s apart. The file source processes oldest
+    * first, so `maxFilesPerTrigger=1` delivers exactly this sequence of
+    * micro-batches. The dir is scratch reused for the whole JVM and
+    * deleted at exit. */
+  private def writeOrderedSplit(s: SparkSession, dir: String, name: String,
+      files: Seq[DataFrame]): Unit = {
+    val fs = hadoopFs(s, dir)
+    val t0 = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case (df, k) =>
+      val tmp = s"$dir/__tmp"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+        .find(_.getName.startsWith("part-"))
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      val target = new Path(dir, f"${name}_$k%02d.parquet")
+      fs.rename(part, target)
+      fs.delete(new Path(tmp), true)
+      fs.setTimes(target, t0 + k * 60000L, -1)
+    }
+    deleteAtExit(s, dir)
+  }
+
+  /** An ordered split of `files` (see [[writeOrderedSplit]]), cached per
+    * (kind, scratchRoot, sfDir). */
+  private def orderedSplit(s: SparkSession, d: String, kind: String,
+      name: String)(files: => Seq[DataFrame]): String =
+    cachedSplit(s, d, kind)(writeOrderedSplit(s, _, name, files))
+
+  /** One split of the events table into 4 parquet files, so the file
+    * source delivers a genuine MULTI-batch stream (maxFilesPerTrigger=1
+    * → 4 micro-batches, 4 chained merge steps) instead of collapsing the
+    * whole table into one batch — the final merged state is
+    * batching-invariant (per-user sums are associative), which is
+    * exactly what the oracle gate checks. */
+  private def eventsSplit(s: SparkSession, d: String): String =
+    cachedSplit(s, d, "stream") { p =>
+      graft.io.Tables.load(s, d, "events").select("user_id", "value")
+        .repartition(4).write.mode("overwrite").parquet(p)
+      deleteAtExit(s, p)
+    }
+
+  /** `src` read as a stream of one file per micro-batch. */
+  private def fileStream(s: SparkSession, src: String): DataFrame =
+    s.readStream.schema(s.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+
+  /** One run's scratch dirs under [[scratchRoot]], globally UUID-unique
+    * (a reused checkpoint from an earlier process would resume ITS
+    * file-source log instead of streaming this split): the version
+    * chain (`v=`/`q=`/`p=` versions, each committed by `_SUCCESS`), the
+    * verdict ledger (`b=` per batch) and the streaming checkpoint. */
+  private final class ChainRun(s: SparkSession, name: String) {
+    private val runId = java.util.UUID.randomUUID()
+    private def dir(kind: String) =
+      s"${scratchRoot(s)}/graft_${name}_${kind}_$runId"
+    val state: String = dir("state")
+    val verd: String = dir("verd")
+    val ckpt: String = dir("ckpt")
+
+    /** Write the base seed `<kind>=0` before the stream starts. */
+    def seed(kind: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$state/$kind=0")
+
+    /** The newest committed version, required to be one fold per
+      * arriving slice. */
+    def finalVersion(folds: Int): Long = {
+      val v = newestCommitted(hadoopFs(s, state), new Path(state))
+      require(v.contains(folds.toLong),
+        s"expected $folds folds, newest version ${v.getOrElse("none")}")
+      folds.toLong
+    }
+  }
+
+  /** The per-run scratch scope: `body` runs on fresh [[ChainRun]] dirs
+    * under [[withStatePartitions]], and the dirs are deleted in
+    * `finally` (ADVICE r10 #3) — a sink or read failure must not leave
+    * them behind, or repeated failing runs grow the scratch root. The
+    * body materializes its result (localCheckpoint) before it returns,
+    * so the result stays valid after the deletion. */
+  private def withChainRun[T](s: SparkSession, name: String)(
+      body: ChainRun => T): T = {
+    val run = new ChainRun(s, name)
+    try withStatePartitions(s)(body(run))
+    finally Seq(run.state, run.verd, run.ckpt).foreach(deletePath(s, _))
+  }
+
+  /** Drive one merge-sink flavor over the 4-file micro-batch stream and
+    * read its final state. The per-batch merge jobs run under
+    * [[withStatePartitions]]: streaming's AQE is off, so the 150-key
+    * deltas would otherwise shuffle at full batch width. */
   private def runMergeStream(s: SparkSession, d: String,
       sink: (DataFrame, String, String) =>
         org.apache.spark.sql.streaming.DataStreamWriter[
@@ -954,27 +1030,11 @@ object StreamOps {
       read: (SparkSession, String) => DataFrame): DataFrame = {
     graft.io.Tables.ensureSessionRegistered(s)
     val src = eventsSplit(s, d)
-    val runId = java.util.UUID.randomUUID()
-    val root = scratchRoot(s)
-    val state = s"$root/graft_merge_state_$runId"
-    val ckpt = s"$root/graft_merge_ckpt_$runId"
-    // scratch deletion in `finally` (ADVICE r10 #3): a sink failure or a
-    // readMergedState error must not leave the per-run dirs behind —
-    // repeated failing runs would otherwise grow the scratch root, the
-    // exact leak the success path's hygiene pin guards against
-    try {
-      // per-batch merge jobs run with streaming's AQE disabled, so the
-      // 150-key deltas would otherwise shuffle at full batch width —
-      // same state-partition sizing rationale as [[withStatePartitions]]
-      withStatePartitions(s) {
-        val schema = s.read.parquet(src).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val q = sink(stream, state, ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-        read(s, state).orderBy("user_id").localCheckpoint(true)
-      }
-    } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+    withChainRun(s, "merge") { run =>
+      val q = sink(fileStream(s, src), run.state, run.ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      read(s, run.state).orderBy("user_id").localCheckpoint(true)
+    }
   }
 
   /** Oracle-gated run of the MERGE upsert sink (VERDICT r9 next #6,
@@ -1061,17 +1121,14 @@ object StreamOps {
     *     around batches 2–3), so the timeout path runs mid-stream too,
     *     not only at the sentinel flush.
     *
-    * File-source ordering: files are named in order AND given strictly
-    * increasing modification times (60 s apart) — the file source
-    * processes oldest-first, so `maxFilesPerTrigger=1` yields exactly
-    * this 6-batch sequence. */
+    * File-source ordering is [[writeOrderedSplit]]'s: one file per
+    * slice, so `maxFilesPerTrigger=1` yields exactly this 6-batch
+    * sequence. */
   private[graft] def statefulSplit(s: SparkSession,
       d: String): StatefulSplit =
     statefulSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
       val dir = s"${scratchRoot(s)}/graft_stateful_split_" +
         java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
       val ev = graft.io.Tables.load(s, d, "events")
         .select("user_id", "event_id", "event_type", "ts")
       val Array(minUs, maxUs) = ev
@@ -1097,20 +1154,8 @@ object StreamOps {
         Seq((-1L, id, "sentinel", new java.sql.Timestamp(ms)))
           .toDF("user_id", "event_id", "event_type", "ts")
       }
-      val files = slices ++
-        Seq(sentinel(-1L, sentA), sentinel(-2L, sentA + 3600000L))
-      val t0 = System.currentTimeMillis()
-      files.zipWithIndex.foreach { case (df, k) =>
-        val tmp = s"$dir/__tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"ev_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
+      writeOrderedSplit(s, dir, "ev", slices ++
+        Seq(sentinel(-1L, sentA), sentinel(-2L, sentA + 3600000L)))
       // authoritative no-drop check: at batch k the watermark is
       // max-ts(files < k) − delay; every file-k row must be at/above it
       val stats = s.read.parquet(dir)
@@ -1131,17 +1176,8 @@ object StreamOps {
             s"${hiSoFar - delayMs * 1000L}")
         hiSoFar = math.max(hiSoFar, hi)
       }
-      deleteAtExit(s, dir)
       StatefulSplit(dir, s"$delayMs milliseconds")
     })
-
-  /** Read the stateful split as a 6-batch micro-batch stream. */
-  private def statefulStream(s: SparkSession,
-      sp: StatefulSplit): DataFrame = {
-    val schema = s.read.parquet(sp.path).schema
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(sp.path)
-  }
 
   /** Oracle-gated micro-batch run of [[sessionize]] (VERDICT r10 next
     * #1 — the hardest streaming state machine gets a CORRECTNESS row):
@@ -1184,7 +1220,7 @@ object StreamOps {
       import s.implicits._
       graft.io.Tables.ensureSessionRegistered(s)
       val sp = statefulSplit(s, d)
-      val evs = statefulStream(s, sp)
+      val evs = fileStream(s, sp.path)
         .select(col("user_id"), col("event_id"), col("ts")).as[Ev]
       val out = withStatePartitions(s)(runToMemorySink(
         sessionize(evs, gapMinutes = 30, watermarkDelay = sp.watermark)
@@ -1226,7 +1262,7 @@ object StreamOps {
       import s.implicits._
       graft.io.Tables.ensureSessionRegistered(s)
       val sp = statefulSplit(s, d)
-      val evs = statefulStream(s, sp)
+      val evs = fileStream(s, sp.path)
         .select(col("user_id"), col("event_type"), col("ts")).as[TypedEv]
       val out = withStatePartitions(s)(runToMemorySink(
         conversionLag(evs, watermarkDelay = sp.watermark,
@@ -1244,55 +1280,62 @@ object StreamOps {
     * corpus = the remaining six `doc_id % 10` slices. */
   private[graft] val IngestSlices: Seq[Long] = Seq(0L, 5L, 3L, 8L)
 
-  private val docsSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ordered 4-file split of the documents table (one file per
-    * [[IngestSlices]] slice, strictly increasing mtimes so the file
-    * source delivers them as 4 micro-batches in slice order) — built
-    * once per (scratchRoot, sfDir) per JVM, deleted at exit. */
+  /** Ordered 4-file split of the documents table, one file per
+    * [[IngestSlices]] slice ([[writeOrderedSplit]]). */
   private[graft] def docsSplit(s: SparkSession, d: String): String =
-    docsSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_docs_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+    orderedSplit(s, d, "docs", "docs") {
       val docs = graft.io.Tables.load(s, d, "documents")
         .select("doc_id", "text")
-      val t0 = System.currentTimeMillis()
-      IngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        docs.filter(pmod(col("doc_id"), lit(10L)) === m)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"docs_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      IngestSlices.map(m => docs.filter(pmod(col("doc_id"), lit(10L)) === m))
+    }
 
-  /** One admit→fold step of the streaming ingest sink: screen the
-    * micro-batch against the newest committed index version, write the
-    * batch's verdict ledger, fold the survivors' bands into the next
-    * index version. Exactly-once by the same version-chain argument as
-    * [[applyMergeBatch]], shifted by one because the BASE index is
-    * seeded at v=0 before the stream starts: batch N reads the newest
-    * committed v ≤ N (its own output is v=N+1, so a replay never chains
-    * off itself) and overwrites v=N+1 and its own `b=N` verdict
-    * directory. The batch's shingles and bands are computed from the
-    * STREAMED text — the index's content derives from what arrived, the
-    * corpus table supplies only the verify join's shingle sets (which a
-    * production pipeline would keep alongside the banding). */
+  /** One micro-batch's step along a SEEDED version chain under
+    * `statePath` — the chain layout every ingest sink shares. The base
+    * seed v=0 is written before the stream starts; batch N reads `prev`,
+    * the newest committed v ≤ N ([[seededVersion]]), and overwrites its
+    * own outputs `<kind>=N+1` and verdict ledger `b=N`. Exactly-once by
+    * [[applyMergeBatch]]'s argument shifted by one: a replay re-reads
+    * the same predecessor and never chains off its own output. Writes
+    * commit with `_SUCCESS`, `v=` last, so a committed `v=N` implies
+    * its sibling `q=N`/`p=N` versions are readable. No version is
+    * pruned while the stream is live (every version must stay
+    * replayable); the per-run dir is deleted by [[withChainRun]]. */
+  private final class ChainStep(s: SparkSession, statePath: String,
+      batchId: Long) {
+    private val fs = hadoopFs(s, statePath)
+    val prev: Long = seededVersion(fs, statePath, batchId)
+    def path(kind: String): String = s"$statePath/$kind=$prev"
+    def read(kind: String): DataFrame = s.read.parquet(path(kind))
+
+    /** sizedForState (r15) by the previous version's bytes: the next
+      * version derives from (and is bounded by a small multiple of) it,
+      * so a KB-scale state is ONE file per version, not shuffle-width
+      * splinters. The batch-proportional ledger is sized the same way
+      * because the sink cannot see its micro-batch's own bytes:
+      * foreachBatch hands it an RDD-backed frame whose inputFiles is
+      * empty (spec-pinned). */
+    def sized(df: DataFrame): DataFrame =
+      sizedForState(df, fs, Seq(new Path(path("v"))))
+
+    def write(kind: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$statePath/$kind=${batchId + 1}")
+
+    def writeLedger(verdicts: DataFrame, verdictsPath: String): Unit =
+      sized(verdicts.withColumn("batch", lit(batchId)))
+        .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+  }
+
+  /** One admit→fold step of the streaming ingest sink ([[ChainStep]]):
+    * screen the micro-batch against the newest committed index version,
+    * write the batch's verdict ledger, fold the survivors' bands into
+    * the next index version. The batch's shingles and bands are
+    * computed from the STREAMED text — the index's content derives from
+    * what arrived, the corpus table supplies only the verify join's
+    * shingle sets (which a production pipeline would keep alongside the
+    * banding). */
   private[graft] def applyIngestBatch(batch: DataFrame, batchId: Long,
       statePath: String, verdictsPath: String, corpusSh: DataFrame): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val step = new ChainStep(batch.sparkSession, statePath, batchId)
     val bsh = graft.functions.TextHash
       .addShingleHashes(batch, col("text")).select("doc_id", "hs")
       // two consumers (bands + verify), one compute; LAZY (r14): the
@@ -1301,34 +1344,16 @@ object StreamOps {
       .localCheckpoint(false)
     val bands = graft.dedup.Dedup.lshBands(bsh)
       .select("doc_id", "band", "key")
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
+    val index = step.read("v")
     val verdicts = graft.dedup.Dedup.screenBatch(
       batch.select("doc_id"), bands, index, bsh, corpusSh)
       // consumed twice (ledger write + survivor fold); LAZY (r14): the
       // ledger write materializes the blocks, the fold reuses them
       .localCheckpoint(false)
-    // sizedForState (r15): the batch-proportional ledger and the folded
-    // index both derive from (and are bounded by a small multiple of)
-    // the previous version's bytes — size the writes so a KB-scale
-    // state is ONE file per version, not shuffle-width splinters
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    step.writeLedger(verdicts, verdictsPath)
     val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
-    sizedForState(
-        index.unionByName(
-          bands.join(survivors, Seq("doc_id"), "left_semi")),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-    // no version pruning during the run: every version must stay
-    // replayable while the stream is live, and the whole per-run dir is
-    // deleted in the driver's finally — 5 versions of a 4-rows-per-doc
-    // banding, not a growth surface
+    step.write("v", step.sized(
+      index.unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))))
   }
 
   /** Deliberate mid-chain crash for the restart gate ([[
@@ -1361,10 +1386,7 @@ object StreamOps {
   private[graft] def runVersionedStream(s: SparkSession, src: String,
       ckpt: String, crashAfter: Option[Long] = None)(
       applyBatch: (DataFrame, Long) => Unit): Unit = {
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
+    val q = fileStream(s, src).writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId)
@@ -1376,49 +1398,28 @@ object StreamOps {
     finally q.stop()
   }
 
-  /** The dedup ingest chain through [[runVersionedStream]]. */
-  private[graft] def runIngestChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String, corpusSh: DataFrame,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyIngestBatch(batch, batchId, state, verd, corpusSh))
-
-  /** The committed verdict ledger across all [[IngestSlices]] batches —
-    * the registered result surface of both ingest gates. */
-  private def ingestLedger(s: SparkSession, verd: String): DataFrame = {
+  /** The committed verdict ledgers `b=0 … b=<batches-1>` under `verd`
+    * (each must carry its `_SUCCESS` marker), as `cols`, in
+    * (batch, doc_id) order. */
+  private def committedLedger(s: SparkSession, verd: String, batches: Int,
+      chain: String)(cols: Column*): DataFrame = {
     val fs = hadoopFs(s, verd)
-    val ledgers = IngestSlices.indices.map { i =>
+    (0 until batches).map { i =>
       val p = s"$verd/b=$i"
-      require(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")),
-        s"ingest batch $i left no committed verdict ledger at $p")
+      require(fs.exists(new Path(p, "_SUCCESS")),
+        s"$chain batch $i left no committed verdict ledger at $p")
       s.read.parquet(p)
-    }
-    ledgers.reduce(_ unionByName _)
-      .select(col("batch"), col("doc_id"), col("best_base"),
-        col("best_jaccard"), col("is_dup"))
+    }.reduce(_ unionByName _)
+      .select(cols: _*)
       .orderBy("batch", "doc_id").localCheckpoint(true)
   }
 
-  /** Streaming CONTINUOUS-INGEST dedup — the [[qDedupIndexUpdate3]]
-    * admit→fold chain graduated from driver-sequenced batch code to the
-    * actual micro-batch runtime: the four batch slices of the documents
-    * table arrive as a real `readStream` file stream (one slice per
-    * micro-batch, in order), each batch's [[applyIngestBatch]] screens
-    * it against the newest committed banding version and folds its
-    * survivors in, and the registered result is the full verdict LEDGER
-    * across all four batches. The DuckDB oracle recomputes the
-    * four-phase admission from scratch (phase-k eligibility = base +
-    * every earlier batch's non-dup survivors), so one dropped,
-    * duplicated, re-ordered, or mis-chained fold anywhere in the
-    * version chain diverges the hash — this is the gate that the
-    * CONTINUOUS path equals the from-scratch semantics under the real
-    * streaming engine, exactly-once versioning included.
-    *
-    * Scale posture: per batch, one directional [[graft.dedup.Dedup
-    * .screenBatch]] probe (|batch| × bucket-occupancy candidates) plus
-    * an append-shaped union write; state grows by survivors' bands
-    * only. The per-run state/checkpoint scratch is UUID-unique under
-    * [[scratchRoot]] and deleted in `finally`. */
+  /** The committed verdict ledger across all [[IngestSlices]] batches —
+    * the registered result surface of the dedup ingest gates. */
+  private def ingestLedger(s: SparkSession, verd: String): DataFrame =
+    committedLedger(s, verd, IngestSlices.size, "ingest")(col("batch"),
+      col("doc_id"), col("best_base"), col("best_jaccard"), col("is_dup"))
+
   /** The from-scratch N-phase admission oracle BUILDER, shared by all
     * three dedup ingest gates (uninterrupted, crash-restart, retune):
     * exactly-once means the RESULT is independent of where the runtime
@@ -1539,24 +1540,36 @@ object StreamOps {
       .filter(!IngestSlices.map(m =>
         pmod(col("doc_id"), lit(10L)) === m).reduce(_ || _))
 
+  /** Streaming CONTINUOUS-INGEST dedup — the [[qDedupIndexUpdate3]]
+    * admit→fold chain graduated from driver-sequenced batch code to the
+    * actual micro-batch runtime: the four batch slices of the documents
+    * table arrive as a real `readStream` file stream (one slice per
+    * micro-batch, in order), each batch's [[applyIngestBatch]] screens
+    * it against the newest committed banding version and folds its
+    * survivors in, and the registered result is the full verdict LEDGER
+    * across all four batches. The DuckDB oracle recomputes the
+    * four-phase admission from scratch (phase-k eligibility = base +
+    * every earlier batch's non-dup survivors), so one dropped,
+    * duplicated, re-ordered, or mis-chained fold anywhere in the
+    * version chain diverges the hash — this is the gate that the
+    * CONTINUOUS path equals the from-scratch semantics under the real
+    * streaming engine, exactly-once versioning included.
+    *
+    * Scale posture: per batch, one directional [[graft.dedup.Dedup
+    * .screenBatch]] probe (|batch| × bucket-occupancy candidates) plus
+    * an append-shaped union write; state grows by survivors' bands
+    * only. The per-run scratch is [[withChainRun]]'s. */
   val qStreamDedupIngest: graft.queries.Q =
     graft.queries.Q("q_stream_dedup_ingest", ingestOracleSql) { (s, d) =>
       graft.io.Tables.ensureSessionRegistered(s)
       val src = docsSplit(s, d)
       val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_ingest_state_$runId"
-      val verd = s"$root/graft_ingest_verd_$runId"
-      val ckpt = s"$root/graft_ingest_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          ingestBaseIndex(s, d).write.mode("overwrite")
-            .parquet(s"$state/v=0")
-          runIngestChain(s, src, state, verd, ckpt, corpusSh)
-          ingestLedger(s, verd)
-        }
-      } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+      withChainRun(s, "ingest") { run =>
+        run.seed("v", ingestBaseIndex(s, d))
+        runVersionedStream(s, src, run.ckpt)(
+          applyIngestBatch(_, _, run.state, run.verd, corpusSh))
+        ingestLedger(s, run.verd)
+      }
     }
 
   /** CRASH-RESTART exactly-once, demonstrated under the real runtime
@@ -1583,33 +1596,27 @@ object StreamOps {
       graft.io.Tables.ensureSessionRegistered(s)
       val src = docsSplit(s, d)
       val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_restart_state_$runId"
-      val verd = s"$root/graft_restart_verd_$runId"
-      val ckpt = s"$root/graft_restart_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          ingestBaseIndex(s, d).write.mode("overwrite")
-            .parquet(s"$state/v=0")
-          // leg 1: the chain dies right after batch 1 lands sink-side
-          runIngestChain(s, src, state, verd, ckpt, corpusSh,
-            crashAfter = Some(1L))
-          val fs = hadoopFs(s, verd)
-          def p(path: String) = new org.apache.hadoop.fs.Path(path)
-          require(fs.exists(p(s"$verd/b=1/_SUCCESS")),
-            "crash must land AFTER batch 1's sink commit")
-          require(!fs.exists(p(s"$verd/b=${IngestSlices.size - 1}")),
-            "crash must land mid-chain, before the tail batches")
-          require(!hadoopFs(s, ckpt).exists(p(s"$ckpt/commits/1")),
-            "batch 1 must be checkpoint-UNcommitted at the cut " +
-              "(sink-committed only) — the torn state under test")
-          // leg 2: a fresh query from the same checkpoint replays
-          // batch 1 and finishes the chain
-          runIngestChain(s, src, state, verd, ckpt, corpusSh)
-          ingestLedger(s, verd)
-        }
-      } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+      withChainRun(s, "restart") { run =>
+        run.seed("v", ingestBaseIndex(s, d))
+        def drive(crashAfter: Option[Long]): Unit =
+          runVersionedStream(s, src, run.ckpt, crashAfter)(
+            applyIngestBatch(_, _, run.state, run.verd, corpusSh))
+        // leg 1: the chain dies right after batch 1 lands sink-side
+        drive(Some(1L))
+        val fs = hadoopFs(s, run.verd)
+        require(fs.exists(new Path(s"${run.verd}/b=1/_SUCCESS")),
+          "crash must land AFTER batch 1's sink commit")
+        require(!fs.exists(new Path(s"${run.verd}/b=${IngestSlices.size - 1}")),
+          "crash must land mid-chain, before the tail batches")
+        require(!hadoopFs(s, run.ckpt).exists(
+            new Path(s"${run.ckpt}/commits/1")),
+          "batch 1 must be checkpoint-UNcommitted at the cut " +
+            "(sink-committed only) — the torn state under test")
+        // leg 2: a fresh query from the same checkpoint replays batch 1
+        // and finishes the chain
+        drive(None)
+        ingestLedger(s, run.verd)
+      }
     }
 
   /** Maintenance budget for the LIVE-STREAM retune gate: the size-biased
@@ -1657,9 +1664,7 @@ object StreamOps {
       statePath: String, verdictsPath: String, corpusSh: DataFrame,
       maintainAfter: Long = RetuneAfterBatch,
       budget: Double = StreamOccBudget): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val step = new ChainStep(batch.sparkSession, statePath, batchId)
     val K = graft.functions.TextHash.K
     val bsh = graft.functions.TextHash
       .addShingleHashes(batch, col("text")).select("doc_id", "hs")
@@ -1667,11 +1672,7 @@ object StreamOps {
       // blocks materialize inside the ledger write's job instead of a
       // dedicated per-batch barrier job
       .localCheckpoint(false)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
+    val index = step.read("v")
     val nb = index.select("nb").head().getInt(0)
     val bands = graft.dedup.Dedup.lshBandsWith(bsh, nb, K / nb)
       .select("doc_id", "band", "key")
@@ -1681,10 +1682,7 @@ object StreamOps {
       // consumed twice (ledger write + survivor fold); LAZY (r14): the
       // ledger write materializes the blocks, the fold reuses them
       .localCheckpoint(false)
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    step.writeLedger(verdicts, verdictsPath)
     val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
     val foldedRaw = index.select("doc_id", "band", "key")
       .unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))
@@ -1702,18 +1700,8 @@ object StreamOps {
         if (fired) retuned.withColumn("nb", lit(2))
         else folded.withColumn("nb", lit(nb))
       } else folded.withColumn("nb", lit(nb))
-    sizedForState(next, fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+    step.write("v", step.sized(next))
   }
-
-  /** The retune-aware ingest chain through [[runVersionedStream]]. */
-  private[graft] def runRetuneChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String, corpusSh: DataFrame,
-      budget: Double = StreamOccBudget,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyRetuneIngestBatch(batch, batchId, state, verd, corpusSh,
-        RetuneAfterBatch, budget))
 
   /** The occupancy-triggered retune UNDER the live stream (VERDICT r12
     * missing #1 / next #2) — the last composition a production ingest
@@ -1741,20 +1729,13 @@ object StreamOps {
         graft.io.Tables.ensureSessionRegistered(s)
         val src = docsSplit(s, d)
         val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-        val runId = java.util.UUID.randomUUID()
-        val root = scratchRoot(s)
-        val state = s"$root/graft_retune_state_$runId"
-        val verd = s"$root/graft_retune_verd_$runId"
-        val ckpt = s"$root/graft_retune_ckpt_$runId"
-        try {
-          withStatePartitions(s) {
-            ingestBaseIndex(s, d)
-              .withColumn("nb", lit(graft.functions.TextHash.Bands))
-              .write.mode("overwrite").parquet(s"$state/v=0")
-            runRetuneChain(s, src, state, verd, ckpt, corpusSh)
-            ingestLedger(s, verd)
-          }
-        } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+        withChainRun(s, "retune") { run =>
+          run.seed("v", ingestBaseIndex(s, d)
+            .withColumn("nb", lit(graft.functions.TextHash.Bands)))
+          runVersionedStream(s, src, run.ckpt)(applyRetuneIngestBatch(
+            _, _, run.state, run.verd, corpusSh))
+          ingestLedger(s, run.verd)
+        }
     }
 
   // ------------------------------------------------------------------
@@ -1765,56 +1746,26 @@ object StreamOps {
     * (the same two slices the batch-mode N-fold gate chains). */
   private[graft] val AnnIngestSlices: Seq[Int] = Seq(7, 3)
 
-  private val embSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Ordered 2-file split of the embeddings BATCH slices (base vectors
     * never stream — they are the seeded index), one file per
-    * [[AnnIngestSlices]] slice with strictly increasing mtimes. */
+    * [[AnnIngestSlices]] slice ([[writeOrderedSplit]]). */
   private[graft] def embSplit(s: SparkSession, d: String): String =
-    embSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_emb_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+    orderedSplit(s, d, "emb", "emb") {
       val vecs = graft.io.Tables.load(s, d, "embeddings")
         .select("vec_id", "embedding")
-      val t0 = System.currentTimeMillis()
-      AnnIngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        vecs.filter(graft.similarity.Similarity.ivfBatchPredicate(s, m))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"emb_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      AnnIngestSlices.map(m =>
+        vecs.filter(graft.similarity.Similarity.ivfBatchPredicate(s, m)))
+    }
 
   /** One IVF fold step of the streaming ANN ingest sink: assign the
     * streamed micro-batch against the FIXED coarse quantizer and union
-    * its cell rows into the next index version. Exactly-once by the
-    * same seeded version chain as [[applyIngestBatch]] (base cells at
-    * v=0; batch N reads newest committed v ≤ N, writes v=N+1). */
+    * its cell rows into the next index version, along the seeded
+    * version chain ([[ChainStep]]; base cells at v=0). */
   private[graft] def applyAnnIngestBatch(batch: DataFrame, batchId: Long,
       statePath: String, anchors: DataFrame): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val step = new ChainStep(batch.sparkSession, statePath, batchId)
     val cells = graft.similarity.Similarity.assignCellsOf(batch, anchors)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    sizedForState(
-        s.read.parquet(s"$statePath/v=$prevV").unionByName(cells),
-        fs, Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+    step.write("v", step.sized(step.read("v").unionByName(cells)))
   }
 
   /** Streaming CONTINUOUS-INGEST for the IVF index — the embedding-side
@@ -1835,8 +1786,7 @@ object StreamOps {
     *
     * Scale posture: per batch, |batch| × Cells broadcast-NLJ assignment
     * (the constant-width append cost) plus an append-shaped union
-    * write; per-run scratch is UUID-unique under [[scratchRoot]] and
-    * deleted in `finally`. */
+    * write; per-run scratch is [[withChainRun]]'s. */
   val qStreamAnnIngest: graft.queries.Q = graft.queries.Q(
     "q_stream_ann_ingest",
     graft.similarity.Similarity.qAnnIndexUpdate3.oracle.getOrElse(
@@ -1845,28 +1795,16 @@ object StreamOps {
     val sim = graft.similarity.Similarity
     val src = embSplit(s, d)
     val anchors = sim.ivfAnchors(s, d).localCheckpoint(true)
-    val runId = java.util.UUID.randomUUID()
-    val root = scratchRoot(s)
-    val state = s"$root/graft_annidx_state_$runId"
-    val ckpt = s"$root/graft_annidx_ckpt_$runId"
-    try {
-      withStatePartitions(s) {
-        sim.ivfBaseCells(s, d, AnnIngestSlices)
-          .write.mode("overwrite").parquet(s"$state/v=0")
-        runVersionedStream(s, src, ckpt)((batch, batchId) =>
-          applyAnnIngestBatch(batch, batchId, state, anchors))
-        val fs = hadoopFs(s, state)
-        val finalV = committedVersions(fs,
-          new org.apache.hadoop.fs.Path(state)).sorted.last
-        require(finalV == AnnIngestSlices.size.toLong,
-          s"expected ${AnnIngestSlices.size} folds, newest version $finalV")
-        val folded = s.read.parquet(s"$state/v=$finalV")
-        sim.ivfServe(s, d, folded)
-          .withColumn("is_new1", sim.ivfIsNewCol(AnnIngestSlices.head))
-          .withColumn("is_new2", sim.ivfIsNewCol(AnnIngestSlices(1)))
-          .orderBy("query_id", "rnk").localCheckpoint(true)
-      }
-    } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+    withChainRun(s, "annidx") { run =>
+      run.seed("v", sim.ivfBaseCells(s, d, AnnIngestSlices))
+      runVersionedStream(s, src, run.ckpt)(
+        applyAnnIngestBatch(_, _, run.state, anchors))
+      val finalV = run.finalVersion(AnnIngestSlices.size)
+      sim.ivfServe(s, d, s.read.parquet(s"${run.state}/v=$finalV"))
+        .withColumn("is_new1", sim.ivfIsNewCol(AnnIngestSlices.head))
+        .withColumn("is_new2", sim.ivfIsNewCol(AnnIngestSlices(1)))
+        .orderBy("query_id", "rnk").localCheckpoint(true)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -1887,76 +1825,104 @@ object StreamOps {
   /** The micro-batch after whose fold the ANN maintenance check runs. */
   private[graft] val RetrainAfterBatch = 0L
 
-  private def readQuant(s: SparkSession,
-      path: String): Seq[(Long, Seq[Long])] =
+  private type Quant = Seq[(Long, Seq[Long])]
+
+  private def readQuant(s: SparkSession, path: String): Quant =
     s.read.parquet(path).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
 
-  /** One fold→MAINTAIN step of the retrain-aware ANN ingest sink: the
-    * state is the Lloyd-quantizer world end to end — each version
-    * carries its cell assignment WITH the int8 codes (`v=N`: vec_id, c,
-    * cl — codes ride along so a retrain can re-train from state alone)
-    * and the quantizer that produced it (`q=N`: cl, m — written FIRST,
-    * so a committed `v=N` implies its quantizer is readable). The
-    * arriving batch codes its own vectors (per-vector max-abs scale ⇒
-    * batching-invariant), assigns them against the newest committed
-    * version's quantizer, and folds. On the maintenance batch, the
-    * cell-balance monitor measures the folded assignment and IFF
-    * imbalance exceeds `budget` the quantizer RETRAINS — 3 Lloyd rounds
-    * over the accumulated codes (seed = codes of the accumulated set's
-    * 8 smallest vec_ids, [[graft.similarity.Similarity.lloydSeed]]) —
-    * and the whole accumulated state is re-assigned; later batches
-    * assign against the retrained centroids they read from the version
-    * chain. The swap lives inside the batch's own version write, so a
-    * crash replay re-derives fold→monitor→decision→retrain→re-assign
-    * deterministically (integer Lloyd — no float reduction order). */
-  private[graft] def applyAnnRetrainBatch(batch: DataFrame, batchId: Long,
-      statePath: String, maintainAfter: Long = RetrainAfterBatch,
-      budget: Double = StreamCellBudget): Unit = {
+  /** The 1-row width version `p=N` of the calibrated chain. */
+  private def readWidth(s: SparkSession, path: String): Int =
+    s.read.parquet(path).head().getLong(0).toInt
+
+  /** One version of the quantizer-world ANN state: the cell assignment
+    * WITH the int8 codes (`v=N`: vec_id, c, cl — codes ride along so a
+    * rebuild can re-train from state alone), the quantizer that produced
+    * it (`q=N`: cl, m) and, on the calibrated chain, the probe width
+    * (`p=N`, one row). */
+  private final case class AnnState(cells: DataFrame, quant: Quant,
+      width: Option[Int])
+
+  /** Write `st` as the chain's base seed (q=0, p=0, then v=0). */
+  private def seedAnn(run: ChainRun, st: AnnState): Unit = {
+    val s = st.cells.sparkSession
+    import s.implicits._
+    run.seed("q", st.quant.toDF("cl", "m"))
+    st.width.foreach(w => run.seed("p", Seq(w.toLong).toDF("w")))
+    run.seed("v", st.cells)
+  }
+
+  /** The chain's final committed state, one fold per arriving slice. */
+  private def finalAnnState(s: SparkSession, run: ChainRun,
+      withWidth: Boolean): AnnState = {
+    val v = run.finalVersion(AnnIngestSlices.size)
+    AnnState(s.read.parquet(s"${run.state}/v=$v"),
+      readQuant(s, s"${run.state}/q=$v"),
+      if (withWidth) Some(readWidth(s, s"${run.state}/p=$v")) else None)
+  }
+
+  /** The fold→MAINTAIN step shared by the three ANN maintenance chains
+    * ([[ChainStep]] layout): read the newest committed state, code the
+    * arriving batch (per-vector max-abs scale ⇒ batching-invariant),
+    * `assign` it against that state's quantizer and fold it in; on the
+    * maintenance batch, `maintain` decides whether the folded state is
+    * rebuilt. The rebuild lives inside the batch's own version write —
+    * `q=` (and `p=`) FIRST, `v=` last, so a committed `v=N` implies its
+    * quantizer (and width) are readable — and a crash replay re-derives
+    * fold→decision→rebuild from the same inputs (integer Lloyd, no
+    * float reduction order). The chains differ only in `maintain`. */
+  private def annMaintainStep(batch: DataFrame, batchId: Long,
+      statePath: String, maintainAfter: Long, withWidth: Boolean,
+      assign: (DataFrame, Quant) => DataFrame)(
+      maintain: AnnState => AnnState): Unit = {
     val s = batch.sparkSession
     val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
+    val step = new ChainStep(s, statePath, batchId)
+    val quant = readQuant(s, step.path("q"))
+    val width =
+      if (withWidth) Some(readWidth(s, step.path("p"))) else None
     val bcodes = sim.int8CodesOf(
       batch.select(col("vec_id"), col("embedding").cast("array<double>")
         .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssign(bcodes, quant)
-        .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // monitor + (maybe) retrain + write
-    val (cellsOut, quantOut) =
-      if (batchId == maintainAfter) {
-        val fired = sim.cellStats(folded.select(col("cl").as("cell")),
-            "fold", budget)
-          .head().getBoolean(7)
-        if (fired) {
-          val cents = sim.lloydCentroids(folded.select("vec_id", "c"),
-            sim.LloydK, rounds = 3)
-          (sim.lloydAssign(folded.select("vec_id", "c"), cents)
-            .select("vec_id", "c", "cl"), cents)
-        } else (folded, quant)
-      } else (folded, quant)
+    val folded = step.read("v").select("vec_id", "c", "cl")
+      .unionByName(assign(bcodes, quant).select("vec_id", "c", "cl"))
+      .localCheckpoint(true) // decision + (maybe) rebuild + write
+    val st = AnnState(folded, quant, width)
+    val out = if (batchId == maintainAfter) maintain(st) else st
     import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+    step.write("q",
+      sizedByRows(out.quant.toDF("cl", "m"), out.quant.size.toLong))
+    out.width.foreach(w =>
+      step.write("p", sizedByRows(Seq(w.toLong).toDF("w"), 1L)))
+    step.write("v", step.sized(out.cells))
   }
 
-  /** The retrain-aware ANN chain through [[runVersionedStream]]. */
-  private[graft] def runAnnRetrainChain(s: SparkSession, src: String,
-      state: String, ckpt: String, budget: Double = StreamCellBudget,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnRetrainBatch(batch, batchId, state, RetrainAfterBatch,
-        budget))
+  /** One fold→MAINTAIN step of the retrain-aware ANN ingest sink
+    * ([[annMaintainStep]]): on the maintenance batch, the cell-balance
+    * monitor measures the folded assignment and IFF imbalance exceeds
+    * `budget` the quantizer RETRAINS — 3 Lloyd rounds over the
+    * accumulated codes (seed = codes of the accumulated set's 8
+    * smallest vec_ids, [[graft.similarity.Similarity.lloydSeed]]) — and
+    * the whole accumulated state is re-assigned; later batches assign
+    * against the retrained centroids they read from the version chain. */
+  private[graft] def applyAnnRetrainBatch(batch: DataFrame, batchId: Long,
+      statePath: String, maintainAfter: Long = RetrainAfterBatch,
+      budget: Double = StreamCellBudget): Unit = {
+    val sim = graft.similarity.Similarity
+    annMaintainStep(batch, batchId, statePath, maintainAfter,
+        withWidth = false, sim.lloydAssign) { st =>
+      val fired = sim.cellStats(st.cells.select(col("cl").as("cell")),
+          "fold", budget)
+        .head().getBoolean(7)
+      if (!fired) st
+      else {
+        val codes = st.cells.select("vec_id", "c")
+        val cents = sim.lloydCentroids(codes, sim.LloydK, rounds = 3)
+        st.copy(cells = sim.lloydAssign(codes, cents)
+          .select("vec_id", "c", "cl"), quant = cents)
+      }
+    }
+  }
 
   /** Two-update (3-round) integer-Lloyd CTE chain over training CTE
     * `ct` seeded from CTE `seed` (cl, m): emits a1/s1/cent1/a2/s2/cent2
@@ -2112,32 +2078,18 @@ object StreamOps {
       graft.io.Tables.ensureSessionRegistered(s)
       val sim = graft.similarity.Similarity
       val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_retrain_state_$runId"
-      val ckpt = s"$root/graft_retrain_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed quantizer + seed assignment
-          val seed = sim.lloydSeed(baseCodes, sim.LloydK)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          sim.lloydAssign(baseCodes, seed).select("vec_id", "c", "cl")
-            .write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnRetrainChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"),
-            readQuant(s, s"$state/q=$finalV"))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      withChainRun(s, "retrain") { run =>
+        val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
+          .localCheckpoint(true) // seed quantizer + seed assignment
+        val seed = sim.lloydSeed(baseCodes, sim.LloydK)
+        seedAnn(run, AnnState(sim.lloydAssign(baseCodes, seed)
+          .select("vec_id", "c", "cl"), seed, None))
+        runVersionedStream(s, src, run.ckpt)(
+          applyAnnRetrainBatch(_, _, run.state))
+        val fin = finalAnnState(s, run, withWidth = false)
+        sim.annRetrainServe(s, d, fin.cells, fin.quant)
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
 
   // ------------------------------------------------------------------
@@ -2163,66 +2115,42 @@ object StreamOps {
   private[graft] val ResizeAfterBatch = 0L
 
   /** One fold→RESIZE step of the size-aware ANN ingest sink — the
-    * state contract of [[applyAnnRetrainBatch]] (versions carry codes +
-    * assignment, `q=N` before `v=N`, swap inside the batch's own
-    * version write ⇒ replay-deterministic) with the maintenance
-    * decision changed from cell BALANCE at fixed k to SIZE at derived
-    * k: after the fold, k_next = ⌈n_folded/occ⌉ is re-derived from the
-    * folded state's own count (the `q_ann_cells_update` arithmetic,
-    * consumed instead of merely reported), and IFF it exceeds the
-    * current quantizer's size — the `grew` flag — the quantizer
-    * RETRAINS at k_next (3 integer-Lloyd rounds over the accumulated
-    * codes, seed = the folded set's k_next smallest vec_ids) and the
-    * whole accumulated state re-assigns. The current size needs no
+    * [[annMaintainStep]] of [[applyAnnRetrainBatch]] with the
+    * maintenance decision changed from cell BALANCE at fixed k to SIZE
+    * at derived k ([[annResized]]). The current size needs no
     * side-channel: it IS the row count of the newest committed `q`
-    * version, so a crash replay re-derives count→k→grew→retrain from
-    * the same inputs. */
+    * version, so a crash replay re-derives count→k→grew→retrain from the
+    * same inputs. */
   private[graft] def applyAnnResizeBatch(batch: DataFrame, batchId: Long,
       statePath: String, maintainAfter: Long = ResizeAfterBatch,
-      occ: Int = StreamTargetOcc): Unit = {
-    val s = batch.sparkSession
-    val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
-    val bcodes = sim.int8CodesOf(
-      batch.select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssignScaled(bcodes, quant)
-        .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // count + (maybe) retrain + write
-    val (cellsOut, quantOut) =
-      if (batchId == maintainAfter) {
-        val kNext = sim.derivedCellsFor(folded.count(), occ)
-        val grew = kNext > quant.size
-        if (grew) {
-          val codes = folded.select("vec_id", "c")
-          val cents = sim.lloydCentroidsSeeded(codes,
-            sim.lloydSeedN(codes, kNext), rounds = 3)
-          (sim.lloydAssignScaled(codes, cents)
-            .select("vec_id", "c", "cl"), cents)
-        } else (folded, quant)
-      } else (folded, quant)
-    import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
+      occ: Int = StreamTargetOcc): Unit =
+    annMaintainStep(batch, batchId, statePath, maintainAfter,
+        withWidth = false, graft.similarity.Similarity.lloydAssignScaled) {
+      st => annResized(st, occ).fold(st) { case (cells, cents) =>
+        st.copy(cells = cells, quant = cents)
+      }
+    }
 
-  /** The size-aware ANN chain through [[runVersionedStream]]. */
-  private[graft] def runAnnResizeChain(s: SparkSession, src: String,
-      state: String, ckpt: String, occ: Int = StreamTargetOcc,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnResizeBatch(batch, batchId, state, ResizeAfterBatch, occ))
+  /** The derived-k SIZE decision: after the fold, k_next = ⌈n_folded/occ⌉
+    * is re-derived from the folded state's own count (the
+    * `q_ann_cells_update` arithmetic, consumed instead of merely
+    * reported), and IFF it exceeds the current quantizer's size — the
+    * `grew` flag — the quantizer RETRAINS at k_next (3 integer-Lloyd
+    * rounds over the accumulated codes, seed = the folded set's k_next
+    * smallest vec_ids) and the whole accumulated state re-assigns:
+    * the re-assigned cells and the new centroids, or None. */
+  private def annResized(st: AnnState, occ: Int): Option[(DataFrame, Quant)] = {
+    val sim = graft.similarity.Similarity
+    val kNext = sim.derivedCellsFor(st.cells.count(), occ)
+    if (kNext <= st.quant.size) None
+    else {
+      val codes = st.cells.select("vec_id", "c")
+      val cents = sim.lloydCentroidsSeeded(codes,
+        sim.lloydSeedN(codes, kNext), rounds = 3)
+      Some((sim.lloydAssignScaled(codes, cents)
+        .select("vec_id", "c", "cl"), cents))
+    }
+  }
 
   /** From-scratch VALUE-GATED oracle for [[qStreamResizeIngest]]: both
     * derived sizes are recomputed from the slice counts (the
@@ -2295,35 +2223,20 @@ object StreamOps {
       graft.io.Tables.ensureSessionRegistered(s)
       val sim = graft.similarity.Similarity
       val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_resize_state_$runId"
-      val ckpt = s"$root/graft_resize_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed sizing + seed assignment
-          val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
-          val seed = sim.lloydSeedN(baseCodes, k0)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          sim.lloydAssignScaled(baseCodes, seed)
-            .select("vec_id", "c", "cl")
-            .write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnResizeChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          val quant = readQuant(s, s"$state/q=$finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"), quant)
-            .withColumn("quant_k", lit(quant.size.toLong))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      withChainRun(s, "resize") { run =>
+        val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
+          .localCheckpoint(true) // seed sizing + seed assignment
+        val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
+        val seed = sim.lloydSeedN(baseCodes, k0)
+        seedAnn(run, AnnState(sim.lloydAssignScaled(baseCodes, seed)
+          .select("vec_id", "c", "cl"), seed, None))
+        runVersionedStream(s, src, run.ckpt)(
+          applyAnnResizeBatch(_, _, run.state))
+        val fin = finalAnnState(s, run, withWidth = false)
+        sim.annRetrainServe(s, d, fin.cells, fin.quant)
+          .withColumn("quant_k", lit(fin.quant.size.toLong))
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
 
   // ------------------------------------------------------------------
@@ -2333,10 +2246,6 @@ object StreamOps {
   // serve probes at the carried width (closing the knob pair under the
   // live runtime: cells sized by count, width sized by cluster scale)
   // ------------------------------------------------------------------
-
-  /** The 1-row width version `p=N` of the calibrated chain. */
-  private def readWidth(s: SparkSession, path: String): Int =
-    s.read.parquet(path).head().getLong(0).toInt
 
   /** One fold→resize→RECALIBRATE step: [[applyAnnResizeBatch]]'s state
     * contract extended with a probe-width version — `q=N` (centroids),
@@ -2352,54 +2261,15 @@ object StreamOps {
   private[graft] def applyAnnCalibrateBatch(batch: DataFrame,
       batchId: Long, statePath: String,
       maintainAfter: Long = ResizeAfterBatch,
-      occ: Int = StreamTargetOcc): Unit = {
-    val s = batch.sparkSession
-    val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
-    val prevW = readWidth(s, s"$statePath/p=$prevV")
-    val bcodes = sim.int8CodesOf(
-      batch.select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssignScaled(bcodes, quant)
-        .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // count + (maybe) retrain + write
-    val (cellsOut, quantOut, widthOut) =
-      if (batchId == maintainAfter) {
-        val kNext = sim.derivedCellsFor(folded.count(), occ)
-        if (kNext > quant.size) {
-          val codes = folded.select("vec_id", "c")
-          val cents = sim.lloydCentroidsSeeded(codes,
-            sim.lloydSeedN(codes, kNext), rounds = 3)
-          val re = sim.lloydAssignScaled(codes, cents)
-            .select("vec_id", "c", "cl")
-            .localCheckpoint(true) // calibrate + write
-          (re, cents, sim.calibratedLloydWidth(re, cents))
-        } else (folded, quant, prevW)
-      } else (folded, quant, prevW)
-    import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedByRows(Seq(widthOut.toLong).toDF("w"), 1L)
-      .write.mode("overwrite").parquet(s"$statePath/p=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
-
-  /** The calibrated chain through [[runVersionedStream]]. */
-  private[graft] def runAnnCalibrateChain(s: SparkSession, src: String,
-      state: String, ckpt: String, occ: Int = StreamTargetOcc,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnCalibrateBatch(batch, batchId, state, ResizeAfterBatch, occ))
+      occ: Int = StreamTargetOcc): Unit =
+    annMaintainStep(batch, batchId, statePath, maintainAfter,
+        withWidth = true, graft.similarity.Similarity.lloydAssignScaled) {
+      st => annResized(st, occ).fold(st) { case (cells, cents) =>
+        val re = cells.localCheckpoint(true) // calibrate + write
+        AnnState(re, cents, Some(graft.similarity.Similarity
+          .calibratedLloydWidth(re, cents)))
+      }
+    }
 
   /** Calibration CTE block over corpus CTE `x` (vec_id, c) and
     * centroid CTE `c0` (cl, m), prefixed to stay unique: `<p>tr` = the
@@ -2510,41 +2380,25 @@ object StreamOps {
       graft.io.Tables.ensureSessionRegistered(s)
       val sim = graft.similarity.Similarity
       val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_calibrate_state_$runId"
-      val ckpt = s"$root/graft_calibrate_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed sizing + assignment + width
-          val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
-          val seed = sim.lloydSeedN(baseCodes, k0)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          val baseAssigned = sim.lloydAssignScaled(baseCodes, seed)
-            .select("vec_id", "c", "cl")
-            .localCheckpoint(true) // seed calibration + v=0 write
-          val w0 = sim.calibratedLloydWidth(baseAssigned, seed)
-          Seq(w0.toLong).toDF("w")
-            .write.mode("overwrite").parquet(s"$state/p=0")
-          baseAssigned.write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnCalibrateChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          val quant = readQuant(s, s"$state/q=$finalV")
-          val w = readWidth(s, s"$state/p=$finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"), quant, probeW = w)
-            .withColumn("quant_k", lit(quant.size.toLong))
-            .withColumn("nprobe", lit(w.toLong))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      withChainRun(s, "calibrate") { run =>
+        val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
+          .localCheckpoint(true) // seed sizing + assignment + width
+        val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
+        val seed = sim.lloydSeedN(baseCodes, k0)
+        val baseAssigned = sim.lloydAssignScaled(baseCodes, seed)
+          .select("vec_id", "c", "cl")
+          .localCheckpoint(true) // seed calibration + v=0 write
+        seedAnn(run, AnnState(baseAssigned, seed,
+          Some(sim.calibratedLloydWidth(baseAssigned, seed))))
+        runVersionedStream(s, src, run.ckpt)(
+          applyAnnCalibrateBatch(_, _, run.state))
+        val fin = finalAnnState(s, run, withWidth = true)
+        val w = fin.width.get
+        sim.annRetrainServe(s, d, fin.cells, fin.quant, probeW = w)
+          .withColumn("quant_k", lit(fin.quant.size.toLong))
+          .withColumn("nprobe", lit(w.toLong))
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
 
   // ------------------------------------------------------------------
@@ -2558,37 +2412,14 @@ object StreamOps {
     * (q_image_index_update) phases. */
   private[graft] val ImgIngestSlices: Seq[Long] = Seq(4L, 14L)
 
-  private val imgSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ordered 2-file split of the variant-doc slices (doc_id, text) —
-    * one file per [[ImgIngestSlices]] slice with strictly increasing
-    * mtimes, so `maxFilesPerTrigger=1` delivers them as ordered
-    * micro-batches. */
+  /** Ordered 2-file split of the variant-doc slices (doc_id, text), one
+    * file per [[ImgIngestSlices]] slice ([[writeOrderedSplit]]). */
   private[graft] def imgSplit(s: SparkSession, d: String): String =
-    imgSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_img_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+    orderedSplit(s, d, "img", "imgs") {
       val docs = graft.io.Tables.load(s, d, "documents")
         .select("doc_id", "text")
-      val t0 = System.currentTimeMillis()
-      ImgIngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        docs.filter(pmod(col("doc_id"), lit(20L)) === m)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"imgs_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      ImgIngestSlices.map(m => docs.filter(pmod(col("doc_id"), lit(20L)) === m))
+    }
 
   /** One admit→fold step of the streaming IMAGE ingest sink: the
     * arriving batch is raw (doc_id, text) rows — the sink derives the
@@ -2603,59 +2434,23 @@ object StreamOps {
     * index is self-verifying — state versions carry (img_id, doc_id,
     * variant, b0..b3) and both the candidate bands and the exact
     * Hamming verify read off it. Exactly-once by the seeded version
-    * chain ([[applyIngestBatch]]'s argument). */
+    * chain ([[ChainStep]]). */
   private[graft] def applyImageIngestBatch(batch: DataFrame, batchId: Long,
       statePath: String, verdictsPath: String): Unit = {
-    val s = batch.sparkSession
     val mm = graft.multimodal.Multimodal
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    val step = new ChainStep(batch.sparkSession, statePath, batchId)
     val bhashes = mm.variantHashesOf(batch)
       .localCheckpoint(true) // decode+hash once: screen twice + fold
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
+    val index = step.read("v")
     val verdicts = mm.screenImgBatch(
       bhashes.select(col("img_id").as("bi")),
       mm.imgBandRows(bhashes), mm.imgBandRows(index), bhashes, index)
       .localCheckpoint(true) // ledger write + survivor fold
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
+    step.writeLedger(verdicts, verdictsPath)
     val survivors = verdicts.filter(!col("is_dup"))
       .select(col("bi").as("img_id"))
-    sizedForState(index.unionByName(
-        bhashes.join(survivors, Seq("img_id"), "left_semi")),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
-
-  /** The image ingest chain through [[runVersionedStream]]. */
-  private[graft] def runImageIngestChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyImageIngestBatch(batch, batchId, state, verd))
-
-  /** The committed verdict ledger across both [[ImgIngestSlices]]
-    * batches, in doc terms. */
-  private def imageIngestLedger(s: SparkSession, verd: String): DataFrame = {
-    val fs = hadoopFs(s, verd)
-    val ledgers = ImgIngestSlices.indices.map { i =>
-      val p = s"$verd/b=$i"
-      require(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")),
-        s"image ingest batch $i left no committed verdict ledger at $p")
-      s.read.parquet(p)
-    }
-    ledgers.reduce(_ unionByName _)
-      .select(col("batch"), expr("bi div 2").as("doc_id"),
-        expr("best_base div 2").as("best_doc"),
-        (col("best_base") % 2).cast("long").as("best_var"),
-        col("best_hamming"), col("is_dup"))
-      .orderBy("batch", "doc_id").localCheckpoint(true)
+    step.write("v", step.sized(index.unionByName(
+      bhashes.join(survivors, Seq("img_id"), "left_semi"))))
   }
 
   /** From-scratch two-phase admission oracle for the image chain: the
@@ -2754,24 +2549,18 @@ object StreamOps {
         graft.io.Tables.ensureSessionRegistered(s)
         val mm = graft.multimodal.Multimodal
         val src = imgSplit(s, d)
-        val runId = java.util.UUID.randomUUID()
-        val root = scratchRoot(s)
-        val state = s"$root/graft_imging_state_$runId"
-        val verd = s"$root/graft_imging_verd_$runId"
-        val ckpt = s"$root/graft_imging_ckpt_$runId"
-        try {
-          withStatePartitions(s) {
-            mm.imgHashes(s, d).filter(col("variant") === 0)
-              .write.mode("overwrite").parquet(s"$state/v=0")
-            runImageIngestChain(s, src, state, verd, ckpt)
-            val fs = hadoopFs(s, state)
-            val finalV = committedVersions(fs,
-              new org.apache.hadoop.fs.Path(state)).sorted.last
-            require(finalV == ImgIngestSlices.size.toLong,
-              s"expected ${ImgIngestSlices.size} folds, newest $finalV")
-            imageIngestLedger(s, verd)
-          }
-        } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+        withChainRun(s, "imging") { run =>
+          run.seed("v", mm.imgHashes(s, d).filter(col("variant") === 0))
+          runVersionedStream(s, src, run.ckpt)(
+            applyImageIngestBatch(_, _, run.state, run.verd))
+          run.finalVersion(ImgIngestSlices.size)
+          // the ledger in doc terms
+          committedLedger(s, run.verd, ImgIngestSlices.size, "image ingest")(
+            col("batch"), expr("bi div 2").as("doc_id"),
+            expr("best_base div 2").as("best_doc"),
+            (col("best_base") % 2).cast("long").as("best_var"),
+            col("best_hamming"), col("is_dup"))
+        }
     }
 
   /** The streaming family's registered (oracle-gated) queries; the

@@ -39,6 +39,10 @@ class MinHashAggSpec extends SparkSpec {
       // plant the <3-token case: an EMPTY shingle set must yield a
       // 16-slot all-null signature in both spellings
       .unionByName(Seq((-1L, Seq.empty[Long])).toDF("doc_id", "hs"))
+      // and a NULL shingle set: the spellings differ in shape there (the
+      // native function returns NULL, the composed one K null slots) but
+      // agree on every slot a consumer reads
+      .unionByName(Seq((-2L, Option.empty[Seq[Long]])).toDF("doc_id", "hs"))
     val composed = sh.select(col("doc_id"),
       array((0 until TextHash.K).map(k =>
         TextHash.minhash(col("hs"), k)): _*).as("sig"))
@@ -46,8 +50,23 @@ class MinHashAggSpec extends SparkSpec {
       graft.functions.GraftMinhashSig.FunctionName, col("hs")).as("sig"))
     val diverged = composed.as("a")
       .join(fused.as("b"), col("a.doc_id") === col("b.doc_id"))
-      .filter(!(col("a.sig") <=> col("b.sig")))
+      .filter(col("a.doc_id") =!= -2L && !(col("a.sig") <=> col("b.sig")))
     assert(diverged.count() == 0)
+    def sigOfNull(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("doc_id") === -2L)
+    assert(sigOfNull(fused).select("sig").head().isNullAt(0),
+      "NULL shingle set: the native function must return NULL")
+    val composedSlots = sigOfNull(composed).select(explode(col("sig")))
+      .collect()
+    assert(composedSlots.length == TextHash.K &&
+      composedSlots.forall(_.isNullAt(0)),
+      "NULL shingle set: the composed spelling must return K null slots")
+    for ((name, df) <- Seq("composed" -> composed, "fused" -> fused)) {
+      val reads = sigOfNull(df)
+        .select((0 until TextHash.K).map(k => col("sig")(k)): _*).head()
+      assert((0 until TextHash.K).forall(reads.isNullAt),
+        s"NULL shingle set: every sig[k] read must be NULL ($name)")
+    }
     val empty = fused.filter(col("doc_id") === -1L)
       .select(explode(col("sig"))).collect()
     assert(empty.length == TextHash.K && empty.forall(_.isNullAt(0)),

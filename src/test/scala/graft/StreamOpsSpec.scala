@@ -587,8 +587,8 @@ class StreamOpsSpec extends SparkSpec {
       try {
         baseIdx.write.mode("overwrite").parquet(s"$state/v=0")
         crashes.foreach { after =>
-          StreamOps.runIngestChain(spark, src, state, verd, ckpt,
-            corpusSh, crashAfter = Some(after))
+          StreamOps.runVersionedStream(spark, src, ckpt, Some(after))(
+            StreamOps.applyIngestBatch(_, _, state, verd, corpusSh))
           // the cut is real and torn: the killed batch sink-committed,
           // absent from the commit log, tail batches not yet run
           assert(fs.exists(new Path(s"$verd/b=$after/_SUCCESS")))
@@ -597,8 +597,8 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$verd/b=${slices.size - 1}")),
             "the kill must land mid-chain")
         }
-        StreamOps.runIngestChain(spark, src, state, verd, ckpt,
-          corpusSh)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyIngestBatch(_, _, state, verd, corpusSh))
         val ledger = slices.indices
           .map(i => spark.read.parquet(s"$verd/b=$i"))
           .reduce(_ unionByName _)
@@ -658,8 +658,9 @@ class StreamOpsSpec extends SparkSpec {
       try {
         baseIdx.write.mode("overwrite").parquet(s"$state/v=0")
         crashes.foreach { after =>
-          StreamOps.runRetuneChain(spark, src, state, verd, ckpt,
-            corpusSh, budget, crashAfter = Some(after))
+          StreamOps.runVersionedStream(spark, src, ckpt, Some(after))(
+            StreamOps.applyRetuneIngestBatch(_, _, state, verd, corpusSh,
+              budget = budget))
           // torn: the killed batch's artifacts are sink-committed
           // (for the swap batch that INCLUDES the retuned index
           // version), absent from the commit log, tail batches unrun
@@ -671,8 +672,9 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$verd/b=${slices.size - 1}")),
             "the kill must land mid-chain")
         }
-        StreamOps.runRetuneChain(spark, src, state, verd, ckpt,
-          corpusSh, budget)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyRetuneIngestBatch(_, _, state, verd, corpusSh,
+            budget = budget))
         val ledger = slices.indices
           .map(i => spark.read.parquet(s"$verd/b=$i"))
           .reduce(_ unionByName _)
@@ -747,8 +749,9 @@ class StreamOpsSpec extends SparkSpec {
         sim.lloydAssign(baseCodes, seed).select("vec_id", "c", "cl")
           .write.mode("overwrite").parquet(s"$state/v=0")
         if (crash) {
-          StreamOps.runAnnRetrainChain(spark, src, state, ckpt, budget,
-            crashAfter = Some(StreamOps.RetrainAfterBatch))
+          StreamOps.runVersionedStream(spark, src, ckpt,
+              Some(StreamOps.RetrainAfterBatch))(
+            StreamOps.applyAnnRetrainBatch(_, _, state, budget = budget))
           // torn THROUGH the retrain: the retrained assignment AND its
           // quantizer are sink-committed, the batch is absent from the
           // commit log, the tail batch never ran
@@ -759,7 +762,8 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$state/v=2")),
             "the kill must land before the tail batch")
         }
-        StreamOps.runAnnRetrainChain(spark, src, state, ckpt, budget)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyAnnRetrainBatch(_, _, state, budget = budget))
         val versions = StreamOps
           .committedVersions(fs, new Path(state)).sorted
         val cells = spark.read.parquet(s"$state/v=${versions.last}")
@@ -801,8 +805,8 @@ class StreamOpsSpec extends SparkSpec {
       try {
         seed.write.mode("overwrite").parquet(s"$state/v=0")
         if (crash) {
-          StreamOps.runImageIngestChain(spark, src, state, verd, ckpt,
-            crashAfter = Some(0L))
+          StreamOps.runVersionedStream(spark, src, ckpt, Some(0L))(
+            StreamOps.applyImageIngestBatch(_, _, state, verd))
           // torn: batch 0's ledger + folded v=1 sink-committed, batch 0
           // absent from the commit log, the tail batch never ran
           assert(fs.exists(new Path(s"$verd/b=0/_SUCCESS")))
@@ -812,7 +816,8 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$verd/b=1")),
             "the kill must land before the tail batch")
         }
-        StreamOps.runImageIngestChain(spark, src, state, verd, ckpt)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyImageIngestBatch(_, _, state, verd))
         val versions = StreamOps
           .committedVersions(fs, new Path(state)).sorted
         assert(versions == Seq(0L, 1L, 2L))
@@ -863,8 +868,9 @@ class StreamOpsSpec extends SparkSpec {
         sim.lloydAssignScaled(baseCodes, seed).select("vec_id", "c", "cl")
           .write.mode("overwrite").parquet(s"$state/v=0")
         if (crash) {
-          StreamOps.runAnnResizeChain(spark, src, state, ckpt, occ,
-            crashAfter = Some(StreamOps.ResizeAfterBatch))
+          StreamOps.runVersionedStream(spark, src, ckpt,
+              Some(StreamOps.ResizeAfterBatch))(
+            StreamOps.applyAnnResizeBatch(_, _, state, occ = occ))
           // torn THROUGH the resize: the re-sized assignment AND its
           // k1-row quantizer are sink-committed, the batch is absent
           // from the commit log, the tail batch never ran
@@ -875,7 +881,8 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$state/v=2")),
             "the kill must land before the tail batch")
         }
-        StreamOps.runAnnResizeChain(spark, src, state, ckpt, occ)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyAnnResizeBatch(_, _, state, occ = occ))
         val versions = StreamOps
           .committedVersions(fs, new Path(state)).sorted
         val cells = spark.read.parquet(s"$state/v=${versions.last}")
@@ -941,8 +948,9 @@ class StreamOpsSpec extends SparkSpec {
           .write.mode("overwrite").parquet(s"$state/p=0")
         baseAssigned.write.mode("overwrite").parquet(s"$state/v=0")
         if (crash) {
-          StreamOps.runAnnCalibrateChain(spark, src, state, ckpt, occ,
-            crashAfter = Some(StreamOps.ResizeAfterBatch))
+          StreamOps.runVersionedStream(spark, src, ckpt,
+              Some(StreamOps.ResizeAfterBatch))(
+            StreamOps.applyAnnCalibrateBatch(_, _, state, occ = occ))
           // torn THROUGH resize + recalibration: q=1 (k1 rows) and p=1
           // (the recalibrated width) are sink-committed, the batch is
           // checkpoint-uncommitted, the tail batch never ran
@@ -954,7 +962,8 @@ class StreamOpsSpec extends SparkSpec {
           assert(!fs.exists(new Path(s"$state/v=2")),
             "the kill must land before the tail batch")
         }
-        StreamOps.runAnnCalibrateChain(spark, src, state, ckpt, occ)
+        StreamOps.runVersionedStream(spark, src, ckpt)(
+          StreamOps.applyAnnCalibrateBatch(_, _, state, occ = occ))
         val versions = StreamOps
           .committedVersions(fs, new Path(state)).sorted
         val cells = spark.read.parquet(s"$state/v=${versions.last}")
@@ -1136,7 +1145,9 @@ class StreamOpsSpec extends SparkSpec {
     // the merge chains off the committed predecessor, overwriting the
     // torn dir. Deliberately-broken-sink check: with the _SUCCESS filter
     // removed from readBucketedState, assertion (1) reads the planted
-    // wrong values (99, 99999) and this test fails.
+    // wrong values (99, 99999) and this test fails. (3) The SEEDED chains
+    // (the ingest sinks) look their predecessor up the same way: a newer
+    // torn version is invisible, and a missing base seed fails loudly.
     import spark.implicits._
     val fsConf = spark.sessionState.newHadoopConf()
     def plantTorn(stateDir: String, key: Long): Unit = {
@@ -1199,6 +1210,23 @@ class StreamOpsSpec extends SparkSpec {
     val v2 = spark.read.parquet(s"$flatPath/v=2").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(v2 == after.updated(3L, (2L, 500L)))
+
+    // -- seeded chain lookup: batch N reads the newest committed v ≤ N
+    val seededPath = java.nio.file.Files
+      .createTempDirectory("graft_seeded_chaos").toString
+    val seededFs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(seededPath), fsConf)
+    // only a torn v=1 exists: no committed seed, so the lookup fails
+    plantTorn(s"$seededPath/v=1", key = 1L)
+    val noSeed = intercept[RuntimeException](
+      StreamOps.seededVersion(seededFs, seededPath, 1L))
+    assert(noSeed.getMessage.contains("the base seed (v=0) is missing"),
+      noSeed.getMessage)
+    // seed committed: batch 1 chains off v=0, never the newer torn v=1
+    Seq((1L, 1L, 100L)).toDF("user_id", "n", "cents")
+      .write.mode("overwrite").parquet(s"$seededPath/v=0")
+    assert(StreamOps.seededVersion(seededFs, seededPath, 1L) == 0L,
+      "the seeded lookup chained off a torn (uncommitted) version")
   }
 
   test("streaming merge apply runs end-to-end over MemoryStream") {
@@ -1369,6 +1397,27 @@ class StreamOpsSpec extends SparkSpec {
     assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
     assert(spark.catalog.listTables().count() == viewsBefore,
       "memory-sink temp view leaked")
+  }
+
+  test("streamed micro-batch: the foreachBatch frame carries no file " +
+    "lineage, so its inputFiles is empty") {
+    // foreachBatch hands the sink an RDD-backed copy of the batch, so a
+    // sink cannot size a write by its micro-batch's own source files:
+    // the verdict ledgers are sized by the predecessor state version
+    // instead (ChainStep.sized). If this flips, size them by the batch.
+    val src = StreamOps.docsSplit(spark, sf001)
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_inputfiles_ckpt").toString
+    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    try StreamOps.runVersionedStream(spark, src, ckpt)((b, id) => {
+        seen.put(id, b.inputFiles.toSeq)
+        ()
+      })
+    finally org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(ckpt), spark.sessionState.newHadoopConf())
+      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val byBatch = (0L until StreamOps.IngestSlices.size).map(seen.get)
+    assert(byBatch.forall(f => f != null && f.isEmpty), byBatch)
   }
 
   test("stateful split: 6 ordered files, out-of-order delivery, no row " +
