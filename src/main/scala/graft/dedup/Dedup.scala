@@ -163,13 +163,11 @@ object Dedup {
     * needlessly drops legitimate df-100 shingles on a corpus whose knee
     * sits above). The derivation keeps exact-pair candidate volume
     * LINEAR by construction: Σ_h df(df−1)/2 over kept shingles must not
-    * exceed `budget × n_docs`. Default 64 candidate verifies per doc —
-    * the sf0.01 corpus generates ~28/doc uncapped, so a clean corpus
-    * derives "no cap", while one boilerplate shingle in every doc blows
-    * the budget at any corpus size. */
-  val JacCapBudgetPerDoc: Long =
-    graft.similarity.Similarity
-      .intKnob("GRAFT_JAC_CAP_BUDGET", 64, 1, 1 << 30).toLong
+    * exceed `budget × n_docs`. 64 candidate verifies per doc — the
+    * sf0.01 corpus generates ~28/doc uncapped, so a clean corpus derives
+    * "no cap", while one boilerplate shingle in every doc blows the
+    * budget at any corpus size. */
+  val JacCapBudgetPerDoc: Long = 64L
 
   /** The df PRE-PASS that SIZES the cap from corpus statistics (1-row
     * frame): from the shingle document-frequency histogram, the derived
@@ -1251,13 +1249,11 @@ object Dedup {
   /** Retune-decision budget: expected verify candidates PER PROBE the
     * standing banding may cost before the report flags a retune. A
     * healthy banded index verifies O(bands) candidates per probe (about
-    * one bucket-mate per band); the default budget is 2× the standing
-    * 4-band shape — beyond ~8 verifies per probe, candidate volume (not
-    * the band join) dominates screen cost and the scheduled
-    * [[qDedupReband]] move is due. Settable without editing source
-    * (same knob discipline as the ANN family). */
-  val OccBudget: Double =
-    graft.similarity.Similarity.doubleKnob("GRAFT_OCC_BUDGET", 8.0, 1.0, 1e9)
+    * one bucket-mate per band); the budget is 2× the standing 4-band
+    * shape — beyond ~8 verifies per probe, candidate volume (not the
+    * band join) dominates screen cost and the scheduled [[qDedupReband]]
+    * move is due. */
+  val OccBudget: Double = 8.0
 
   /** Per-band bucket-occupancy report over one banding's (doc_id, band,
     * key) rows — the monitoring half of the retune lifecycle (VERDICT
@@ -1770,7 +1766,7 @@ object Dedup {
     * spelling. Throws if `maxRounds` is hit, rather than returning a
     * partial clustering. */
   private[graft] def starComponents(pairs: DataFrame,
-      maxRounds: Int = 30, roundsPerCheck: Int = 1): DataFrame = {
+      maxRounds: Int = 30): DataFrame = {
     // canonical (u > v) orientation, self-loops dropped
     var edges = pairs.toDF("a", "b")
       .select(greatest(col("a"), col("b")).as("u"),
@@ -1786,18 +1782,10 @@ object Dedup {
       // Every star round is materialized (a round references its input
       // several times — composing rounds plan-side re-evaluates the
       // shared subtree per reference: measured 2× wall per batched round
-      // on a 1M-edge deep graph, tools/CCProbe r6). Batching therefore
-      // skips only the CHECK (count + except) on intermediate rounds,
-      // trading ≤ roundsPerCheck−1 extra no-op rounds for
-      // 1/roundsPerCheck of the per-check job costs. Sound because the
-      // operator pair has a strictly decreasing potential (Kiveris et al.
-      // §4) — no periodic orbits a batched equality check could mistake
-      // for a fixed point.
-      var cur = edges
-      (1 to roundsPerCheck).foreach { _ =>
-        cur = starRound(cur).localCheckpoint(true); rounds += 1
-      }
-      val next = cur
+      // on a 1M-edge deep graph, r6) and checked every round (skipping
+      // the check on intermediate rounds lost on shallow graphs, r3).
+      val next = starRound(edges).localCheckpoint(true)
+      rounds += 1
       // fixed point: a min-rooted star is invariant under both operators.
       // Both frames are DISTINCT sets, so |A|=|B| ∧ A∖B=∅ ⟺ A=B: the
       // cheap count gates the single except (exact, no fingerprints) —
@@ -1809,13 +1797,8 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"star CC did not converge in $maxRounds rounds")
-    lastStarRounds = rounds
     nodesWithRoots(nodes, edges)
   }
-
-  /** Star rounds the last [[starComponents]] call took — a debug/spec
-    * observable (driver-side scalar, set once per call). */
-  @volatile private[graft] var lastStarRounds: Int = 0
 
   /** One large-star + small-star round over a canonical (u > v) edge set —
     * plan-only (no materialization; the loop in [[starComponents]] decides

@@ -96,17 +96,15 @@ object GraphOps {
     * 100 TB graph scale does not fit an executor, so loops fall back
     * to the planner's shuffle join above the ceiling. 2 M rows of
     * (long, long) ≈ 64 MB framed — inside the guide's "a few hundred
-    * MB is usually fine", parameterized for bigger drivers. */
-  private def graphBroadcastNodes(s: SparkSession): Long =
-    s.conf.get("spark.graft.graphBroadcastNodes", "2000000").toLong
+    * MB is usually fine". */
+  private final val GraphBroadcastNodes = 2000000L
 
-  /** The node-keyed loop side under the [[graphBroadcastNodes]]
+  /** The node-keyed loop side under the [[GraphBroadcastNodes]]
     * dispatch: `rows` is a driver-known upper bound on `df`'s rows
     * (node count, frontier count, or edge count — whichever scalar the
     * loop already holds). */
-  private def nodeSide(s: SparkSession, df: DataFrame,
-      rows: Long): DataFrame =
-    if (rows <= graphBroadcastNodes(s)) broadcast(df) else df
+  private def nodeSide(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= GraphBroadcastNodes) broadcast(df) else df
 
   /** Fixed-point PageRank, [[Iterations]] rounds, top-20 nodes.
     * r⁰(v) = ⌊Mass/N⌋; rᵏ⁺¹(v) = ⌊15·Mass/(100·N)⌋ +
@@ -159,7 +157,7 @@ object GraphOps {
       .select(col("node"), lit(Mass / n).as("r"))
       .localCheckpoint(true)
     for (_ <- 0 until Iterations) {
-      r = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
+      r = ec.join(nodeSide(r, n), ec("src") === r("node"))
         .groupBy(ec("dst").as("node2"))
         .agg(sum(expr("r div d")).as("s"))
         .select(col("node2").as("node"),
@@ -232,7 +230,7 @@ object GraphOps {
         .localCheckpoint(true)
       val n = nodeCount(s, d)
       for (_ <- 0 until Iterations) {
-        val votes = e.join(nodeSide(s, lbl, n), e("src") === lbl("node"))
+        val votes = e.join(nodeSide(lbl, n), e("src") === lbl("node"))
           .groupBy(e("dst").as("node2"), col("lbl"))
           .agg(count(lit(1)).as("c"))
         lbl = graft.plans.TopKPerKey.topKPerKey(votes, Seq("node2"),
@@ -307,7 +305,7 @@ object GraphOps {
       .select(col("node"), lit((15L * Mass) / (100L * ns)).as("r"))
       .localCheckpoint(true)
     for (_ <- 0 until Iterations) {
-      val prop = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
+      val prop = ec.join(nodeSide(r, n), ec("src") === r("node"))
         .groupBy(ec("dst").as("node"))
         .agg(expr(s"CAST(($DampNum * SUM(r div d)) div 100 AS BIGINT)")
           .as("r"))
@@ -628,7 +626,7 @@ object GraphOps {
     val bound = nodeCount(s, d) + labels.count()
     for (_ <- 0 until BfsRounds) {
       labels = labels
-        .unionByName(e.join(nodeSide(s, labels, bound),
+        .unionByName(e.join(nodeSide(labels, bound),
             e("src") === labels("node"))
           .select(e("dst").as("node"), (labels("hop") + 1).as("hop")))
         .groupBy("node").agg(min("hop").as("hop"))
@@ -694,9 +692,9 @@ object GraphOps {
         .select(col("src").as("node"), col("dg"))
         .localCheckpoint(false)
       e = e
-        .join(nodeSide(s, keep.select(col("node").as("src")), n),
+        .join(nodeSide(keep.select(col("node").as("src")), n),
           Seq("src"), "left_semi")
-        .join(nodeSide(s, keep.select(col("node").as("dst")), n),
+        .join(nodeSide(keep.select(col("node").as("dst")), n),
           Seq("dst"), "left_semi")
         .select("src", "dst")
         .localCheckpoint(false)
@@ -750,9 +748,9 @@ object GraphOps {
       // survivors ≤ distinct src ≤ n (this round's edge count, already
       // collected as the convergence scalar) — the nodeSide bound
       val e2 = e
-        .join(nodeSide(s, keep.select(col("node").as("src")), n),
+        .join(nodeSide(keep.select(col("node").as("src")), n),
           Seq("src"), "left_semi")
-        .join(nodeSide(s, keep.select(col("node").as("dst")), n),
+        .join(nodeSide(keep.select(col("node").as("dst")), n),
           Seq("dst"), "left_semi")
         .select("src", "dst")
         .localCheckpoint(false)
@@ -788,7 +786,7 @@ object GraphOps {
       // one-job-per-round variant landed 1.29-1.30 s vs 1.23 s eager at
       // sf0.1 — the rank chain prefers a known-size compact leaf per
       // round, the same result qPagerank's eager-vs-lazy note records).
-      val r2 = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
+      val r2 = ec.join(nodeSide(r, n), ec("src") === r("node"))
         .groupBy(ec("dst").as("node2"))
         .agg(sum(expr("r div d")).as("s"))
         .select(col("node2").as("node"),
@@ -796,7 +794,7 @@ object GraphOps {
             s"+ ($DampNum * s) div 100 AS BIGINT)").as("r"))
         .localCheckpoint(true)
       val delta = r2.select(col("node"), col("r").as("r2"))
-        .join(nodeSide(s, r, n), "node")
+        .join(nodeSide(r, n), "node")
         .agg(coalesce(max(abs(col("r2") - col("r"))), lit(0L)))
         .first().getLong(0)
       converged = delta <= tolPico
@@ -841,11 +839,11 @@ object GraphOps {
       // the shuffle volume is unchanged.
       // frontier rows = fn, labels rows = labelRows — both collected
       // already, so the nodeSide dispatch costs no extra action
-      val next = e.join(nodeSide(s, frontier, fn),
+      val next = e.join(nodeSide(frontier, fn),
           e("src") === frontier("node"))
         .select(e("dst").as("node"), (frontier("hop") + 1).as("hop"))
         .groupBy("node").agg(min("hop").as("hop"))
-        .join(nodeSide(s, labels.select(col("node").as("seen")), labelRows),
+        .join(nodeSide(labels.select(col("node").as("seen")), labelRows),
           col("node") === col("seen"), "left_anti")
         .localCheckpoint(false)
       labels = labels.unionByName(next).localCheckpoint(false)

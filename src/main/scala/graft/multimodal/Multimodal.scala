@@ -730,8 +730,7 @@ object Multimodal {
     * the 64-bit hash). 10 is the usual operating point: resize and
     * re-encode perturb a handful of boundary comparisons; unrelated
     * images land near 32. */
-  val DhashHamming: Int =
-    graft.similarity.Similarity.intKnob("GRAFT_DHASH_HAMMING", 10, 0, 64)
+  val DhashHamming: Int = 10
 
   /** 64-bit DIFFERENCE HASH (dHash) of a gray8 bitmap: bit (r,c) set
     * iff mean luma of downsample cell (r, c+1) exceeds cell (r, c) over
@@ -865,7 +864,7 @@ object Multimodal {
     * ~N²/256, catastrophic at crawl scale — so the 16-bit keys stay.
     * What the gap actually costs at each transform severity is
     * measured, not asserted: SCALE.md r14's operating-point sweep
-    * (tools.DhashSweep) separates banded-candidate recall from verdict
+    * separates banded-candidate recall from verdict
     * recall across radii, and `ImageDhashSpec` pins the planted-variant
     * catch floor.
     *

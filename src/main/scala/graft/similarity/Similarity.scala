@@ -39,53 +39,17 @@ import graft.queries.Q
   */
 object Similarity {
 
-  /** One integer tuning knob: environment variable first, then JVM system
-    * property (same name), then the built-in default; range-validated at
-    * class init so a bad setting fails fast, not mid-query. Frozen at
-    * object init — every query and every generated oracle/twin SQL string
-    * in one JVM sees the SAME value, which is what keeps the engine and
-    * its DuckDB oracle consistent under ANY setting (the oracle CTEs
-    * interpolate these vals, they never hard-code them). */
-  private[graft] def intKnob(name: String, default: Int, lo: Int,
-      hi: Int): Int = {
-    val v = sys.env.get(name).orElse(sys.props.get(name)) match {
-      case Some(s) =>
-        try s.trim.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$name='$s' is not an int") }
-      case None => default
-    }
-    require(v >= lo && v <= hi, s"$name=$v outside [$lo, $hi]")
-    v
-  }
-
-  /** Double-valued tuning knob, same resolution order and fail-fast
-    * validation as [[intKnob]] (ADVICE r7 #2 — thresholds like the
-    * near-dup cosine bar must be settable without editing source). */
-  private[graft] def doubleKnob(name: String, default: Double, lo: Double,
-      hi: Double): Double = {
-    val v = sys.env.get(name).orElse(sys.props.get(name)) match {
-      case Some(s) =>
-        try s.trim.toDouble
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$name='$s' is not a double") }
-      case None => default
-    }
-    require(v >= lo && v <= hi, s"$name=$v outside [$lo, $hi]")
-    v
-  }
-
   /** LSH banding shape: Bands × PlanesPerBand total hyperplanes.
-    * PlanesPerBand is the scale knob (per-band bucket space = 2^R);
-    * Bands is the recall knob (OR-construction).
+    * PlanesPerBand sets the scale (per-band bucket space = 2^R);
+    * Bands sets the recall (OR-construction).
     *
-    * Tunable (VERDICT r5 #5) via env var or -D system property; the
-    * defaults fit the sf-test corpus (N≈2k). Sizing at scale:
+    * The values fit the sf-test corpus (N≈2k). Sizing at scale:
     * R = PlanesPerBand ≈ log2(N / target-bucket-size) — e.g. N=10⁹
     * vectors at ~1k-vector buckets ⇒ R≈20; Bands per the recall target
-    * 1−(1−p^R)^B. */
-  val Bands: Int = intKnob("GRAFT_LSH_BANDS", 4, 1, 64)
-  val PlanesPerBand: Int = intKnob("GRAFT_LSH_PLANES_PER_BAND", 8, 1, 30)
+    * 1−(1−p^R)^B. The oracle SQL interpolates these vals, so engine and
+    * oracle always share one shape. */
+  val Bands: Int = 4
+  val PlanesPerBand: Int = 8
   val Dim = 64
 
   /** Deterministic ±1 sign from a splitmix64-style finalizer over a flat
@@ -319,13 +283,9 @@ object Similarity {
     * empty-vs-empty hash match that can never fail (VERDICT r6 wrong #1).
     * 0.40 is the tightest bar the corpus can non-vacuously gate (~5
     * pairs at sf0.01): the banding, scoring, and threshold logic are all
-    * value-exercised; at production scale the bar is the user's knob —
-    * literally (ADVICE r7 #2): `GRAFT_NEAR_DUP_COS` (env or -D system
-    * property) overrides the synthetic-corpus default, so production
-    * callers get the documented 0.95+ behavior without editing source.
-    * Like every knob, the oracle SQL interpolates the resolved value, so
-    * engine and oracle move together under any setting. */
-  val NearDupCos: Double = doubleKnob("GRAFT_NEAR_DUP_COS", 0.40, -1.0, 1.0)
+    * value-exercised. The oracle SQL interpolates this val, so engine
+    * and oracle share one bar. */
+  val NearDupCos: Double = 0.40
 
   /** Embedding-cosine near-duplicate pairs (the embedding analog of
     * MinHash dedup): pairs sharing ANY band key, kept when cosine ≥
@@ -364,29 +324,25 @@ object Similarity {
     * deterministic slice of the corpus itself (vec_id 100..100+Cells-1) so
     * both engines share them without an iterative k-means whose float
     * reduction order would diverge across engines. */
-  /** Tunable (VERDICT r5 #5) like the LSH shape above. Sizing at scale:
-    * cells ≈ √N (the FAISS IVF guideline — N=10⁹ ⇒ ~32k cells, NOT the
-    * 16 that fits the 2k-vector test corpus), nprobe trades recall for
-    * probe cost (1–8% of cells is the usual band). The probed-cell
-    * candidate volume is N·nprobe/cells per query — keeping it flat
-    * under 1000× data means growing cells 1000×, which is exactly why
-    * this is a knob and not a constant. */
-  val IvfCells: Int = intKnob("GRAFT_IVF_CELLS", 16, 1, 1 << 20)
-  val IvfProbe: Int = intKnob("GRAFT_IVF_NPROBE", 2, 1, 1 << 10)
+  /** Sizing at scale: cells ≈ √N (the FAISS IVF guideline — N=10⁹ ⇒
+    * ~32k cells, NOT the 16 that fits the 2k-vector test corpus), nprobe
+    * trades recall for probe cost (1–8% of cells is the usual band). The
+    * probed-cell candidate volume is N·nprobe/cells per query — keeping
+    * it flat under 1000× data means growing cells 1000×, which is what
+    * the statistics-derived sizing ([[IvfTargetOcc]]) does. */
+  val IvfCells: Int = 16
+  val IvfProbe: Int = 2
 
   /** Retrain-decision threshold on cell BALANCE: probe cost in an IVF
     * index is the probed cells' total size, so the number the operator
     * watches is the imbalance factor max_cell / (n/cells) — how much a
     * worst-case probe costs relative to a balanced index. Flag a
     * retrain when the hottest cell exceeds `CellBalance`× its balanced
-    * share (default 2.0: the hottest probe costs double). Same knob
-    * discipline as the dedup side's `GRAFT_OCC_BUDGET`. (Declared with
-    * the knob block: object init is declaration-ordered, and the
-    * auto-sizing report's oracle string interpolates this value at
-    * init.) */
-  val CellBalance: Double = doubleKnob("GRAFT_CELL_BALANCE", 2.0, 1.0, 1e6)
-  require(IvfProbe <= IvfCells,
-    s"GRAFT_IVF_NPROBE=$IvfProbe exceeds GRAFT_IVF_CELLS=$IvfCells")
+    * share (2.0: the hottest probe costs double). The dedup side's
+    * counterpart is `Dedup.OccBudget`. (Declared with the IVF shape:
+    * object init is declaration-ordered, and the auto-sizing report's
+    * oracle string interpolates this value at init.) */
+  val CellBalance: Double = 2.0
 
   /** Trained-quantizer cell count for every [[lloydCentroids]]-backed
     * serving path (kmeans assignment, IVF-kmeans, retrain, lifecycle).
@@ -395,21 +351,12 @@ object Similarity {
   private[graft] val LloydK = 8
 
   /** Effective probe width on Lloyd-trained quantizers (ADVICE r11):
-    * `GRAFT_IVF_NPROBE` validates against [[IvfCells]] (16), but a
-    * trained quantizer only HAS [[LloydK]] = 8 cells, so probe values in
-    * (8, 16] would pass validation yet silently probe all 8 cells —
-    * a no-op knob. Clamp EXPLICITLY (both the engine `slice` and the
-    * interpolated oracle `rn <=` bound use this value) and warn once so
-    * the effective value is visible to the operator rather than
-    * discovered from recall curves. */
-  val LloydProbe: Int = {
-    if (IvfProbe > LloydK)
-      System.err.println(s"[graft] GRAFT_IVF_NPROBE=$IvfProbe exceeds the " +
-        s"trained-quantizer cell count k=$LloydK; Lloyd-backed queries " +
-        s"probe all $LloydK cells (hash-anchor queries still probe " +
-        s"$IvfProbe of $IvfCells)")
-    math.min(IvfProbe, LloydK)
-  }
+    * [[IvfProbe]] is bounded by [[IvfCells]] (16), but a trained
+    * quantizer only HAS [[LloydK]] = 8 cells, so a probe width in
+    * (8, 16] would silently probe all 8 cells. Clamp EXPLICITLY (both
+    * the engine `slice` and the interpolated oracle `rn <=` bound use
+    * this value). */
+  val LloydProbe: Int = math.min(IvfProbe, LloydK)
   private[graft] val IvfAnchorBase = 100
 
   /** Shared oracle CTE fragment: `ranked` = every vector scored against
@@ -495,14 +442,14 @@ object Similarity {
     * probed cell may cost), and the CELL COUNT is derived from the
     * corpus, not hardcoded. Probe cost per query is then
     * nprobe × target_occ BY CONSTRUCTION, flat under any data growth —
-    * the property `GRAFT_IVF_CELLS=16` silently loses the moment the
+    * the property a fixed `IvfCells = 16` silently loses the moment the
     * corpus outgrows the constant (at 25× the fixed 16 cells hold ~3k
     * vectors each; the derived count holds every cell at ~128).
-    * Default 128 ≈ the FAISS IVF guideline's occupancy at the
-    * bench corpus (2k vecs / √N·√N), so at 1× the derivation lands
-    * exactly on the incumbent 16 — the knob change is observable only
-    * where it should be, at scale. */
-  val IvfTargetOcc: Int = intKnob("GRAFT_IVF_TARGET_OCC", 128, 1, 1 << 30)
+    * 128 ≈ the FAISS IVF guideline's occupancy at the bench corpus
+    * (2k vecs / √N·√N), so at 1× the derivation lands exactly on the
+    * incumbent 16 — the derivation is observable only where it should
+    * be, at scale. */
+  val IvfTargetOcc: Int = 128
 
   /** Broadcast ceiling for the anchor frame of the AUTO-sized quantizer
     * (ADVICE r13): derived cells grow as ⌈n/occ⌉ up to 2^20, and at
@@ -511,10 +458,9 @@ object Similarity {
     * count the assignment drops the broadcast hint and lets the planner
     * partition both sides (the N×cells work is inherent to flat
     * assignment either way — the ceiling only changes the delivery
-    * mechanism). Default 2^16 cells ≈ 32 MB of anchor payload, the
-    * usual safe auto-broadcast ballpark. */
-  val BcastCellsMax: Int = intKnob("GRAFT_BCAST_CELLS_MAX", 1 << 16, 1,
-    1 << 30)
+    * mechanism). 2^16 cells ≈ 32 MB of anchor payload, the usual safe
+    * auto-broadcast ballpark. */
+  val BcastCellsMax: Int = 1 << 16
 
   /** cells = ⌈n_vecs / target_occ⌉ clamped to [1, 2^20] — all integer
     * arithmetic, spelled identically in the DuckDB oracle and the
@@ -524,7 +470,7 @@ object Similarity {
 
   /** The same derivation at an explicit occupancy target — shared with
     * the streaming RESIZE chain ([[graft.streaming.StreamOps]]'s
-    * q_stream_resize_ingest), whose target is its own knob. */
+    * q_stream_resize_ingest), whose target is its own constant. */
   private[graft] def derivedCellsFor(nVecs: Long, occ: Int): Int = {
     // ceil spelled without the +occ-1 addition, which wraps at the top
     // of the long range (the same overflow class ADVICE r12 flagged in
@@ -820,7 +766,7 @@ object Similarity {
     * cells]) — full recall ON THE SAMPLE by construction; what the
     * derivation buys is that the width tracks the corpus's cluster
     * scale instead of a hand knob (clustered 25×: derives 4 where
-    * `GRAFT_IVF_NPROBE` had to be hand-set; held-out queries measured
+    * the fixed [[IvfProbe]] had to be hand-set; held-out queries measured
     * in SCALE.md r14). On structure-free uniform noise the sample
     * honestly demands a wide probe — the r9/r13 studies' structural
     * conclusion, surfaced as a number instead of silent recall loss. */
@@ -925,7 +871,7 @@ object Similarity {
     * vice versa) still hash-mismatches. For the registered gate the
     * served queries ARE the calibration sample — full recall on them
     * is by construction; the held-out generalization is measured in
-    * SCALE.md r14 (AnnCellsProbe's auto_probe tier). */
+    * SCALE.md r14 (the auto_probe tier). */
   val qAnnIvfProbeAuto: Q = Q("q_ann_ivf_probe_auto",
     s"""WITH $ivfRankedAutoCteSql,
        |$probeNeedCteSql,
@@ -1274,7 +1220,7 @@ object Similarity {
     * Scale posture: the fold is |batch| × Cells broadcast-nested-loop
     * (Cells rows broadcast — constant width) + an append-shaped union;
     * the serve is [[qAnnIvf]]'s probe-cell equi-join unchanged. At
-    * 100 TB the anchor set grows ~√N via the GRAFT_IVF_CELLS knob and
+    * 100 TB the anchor set grows ~√N ([[IvfCells]]) and
     * a retrain is a scheduled rebuild, not a per-batch cost. */
   val qAnnIndexUpdate: Q = Q("q_ann_index_update",
     s"""WITH $ivfRankedCteSql,
@@ -1853,8 +1799,8 @@ object Similarity {
     *
     * Spelled as the integer dot identity Σc² + Σm² − 2⟨c,m⟩ with ⟨·,·⟩
     * the codegen'd [[graft.functions.GraftDotLong]] kernel and Σm²
-    * folded driver-side into the literal (r14 optimization, measured by
-    * tools/LloydProbe at sf0.1: the previous `aggregate(zip_with(…))`
+    * folded driver-side into the literal (r14 optimization, measured
+    * at sf0.1: the previous `aggregate(zip_with(…))`
     * HOF fold is CodegenFallback — interpreted per (row, centroid), one
     * 64-element array allocation each — at ~300 ms per Lloyd round vs
     * ~145 ms for this spelling; the 15-round converged loop dropped
@@ -2184,7 +2130,7 @@ object Similarity {
     * Completes the lifecycle-monitoring symmetry: `q_dedup_occupancy`
     * reports the retune trigger, this reports the retrain trigger that
     * [[qAnnIvfRetrain]]/[[qAnnLifecycle]] pay. Oracle recomputes both
-    * assignments and the report from scratch. `AnnKnobsSpec` drives the
+    * assignments and the report from scratch. `KmeansSpec` drives the
     * flag's fire→clear transition on skewed/balanced fixtures. */
   val qAnnCellStats: Q = Q("q_ann_cell_stats",
     s"""WITH $ivfRankedCteSql,
@@ -3698,7 +3644,7 @@ object Similarity {
 
   /** Recall@3 of every ANN tier against its exact ground truth, as a
     * FIRST-CLASS oracle-gated report (VERDICT r6 missing #2 / next #5):
-    * a user tuning `GRAFT_LSH_*`/`GRAFT_IVF_*` reads recall as a query,
+    * a change to the LSH/IVF shape constants reads recall as a query,
     * and an engine-side banding/scoring regression flips this gate.
     *
     * hits = |tier top-3 ∩ ground-truth top-3| (integer, deterministic);

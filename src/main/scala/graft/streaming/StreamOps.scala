@@ -343,9 +343,12 @@ object StreamOps {
       sys.error(s"no committed index version <= $batchId under " +
         s"$statePath — the base seed (v=0) is missing"))
 
+  /** Target bytes per state-version file, see [[sizedForState]]. */
+  private final val StateFileBytes = 64L * 1024 * 1024
+
   /** Output-file sizing for a state-version write (r15, guide §6
     * "sensible output file sizing" / small-files): the write coalesces
-    * to ⌈source bytes / spark.graft.stateFileBytes (64 MB)⌉ partitions,
+    * to ⌈source bytes / [[StateFileBytes]] (64 MB)⌉ partitions,
     * where the source bytes are the on-disk length of the version(s)
     * the write derives from — one driver-side ContentSummary call, no
     * extra Spark job. Why: every state version was written at the
@@ -366,12 +369,9 @@ object StreamOps {
     * writer. */
   private def sizedForState(df: DataFrame, fs: FileSystem,
       sources: Seq[Path]): DataFrame = {
-    val target = df.sparkSession.conf
-      .get("spark.graft.stateFileBytes", (64L * 1024 * 1024).toString)
-      .toLong
     val bytes = sources.filter(fs.exists)
       .map(p => fs.getContentSummary(p).getLength).sum
-    df.repartition(math.max(1L, (bytes + target - 1) / target)
+    df.repartition(math.max(1L, (bytes + StateFileBytes - 1) / StateFileBytes)
       .min(1 << 20).toInt)
   }
 
@@ -784,35 +784,43 @@ object StreamOps {
     ()
   }
 
+  /** State-store partition count for the streaming queries. Why 8:
+    * per-micro-batch cost at gate scale is dominated by per-partition
+    * state-store open/commit/maintenance (32 stores × 6 batches of file
+    * ops for a 150-key state), not by data — measured 2× on the
+    * sessionize gate and 2.5× on conversionLag at sf0.1 (9.4 → 5.2 s,
+    * 8.8 → 3.5 s medians). At production scale the right number RISES
+    * with the keyspace (state partitions bound stateful parallelism and
+    * per-store memory), not with the batch engine's shuffle width. */
+  private final val StreamStatePartitions = 8
+
+  /** AQE off for the per-batch sink bodies (r15, measured): a
+    * maintenance batch here is a LATENCY-bound sequence of small plans
+    * (screen → ledger write → fold write), and AQE turns every Exchange
+    * into its own materialized query stage — a separate job plus a
+    * driver re-optimization pause. JobProfile measured the dedup chain
+    * at 75 jobs/run with AQE vs 33 without (−1.8 s of a 7.9 s run;
+    * retune −1.2 s) with the 8-partition state width making coalescing
+    * moot. */
+  private final val StreamBatchAQE = false
+
   /** Run `body` (which starts and drains a streaming query) with the
     * session's shuffle-partition count — which Structured Streaming
     * latches at query start as its STATE-STORE partition count — set to
-    * `spark.graft.streamStatePartitions` (default 8), restoring the
-    * previous value after. Why: per-micro-batch cost at gate scale is
-    * dominated by per-partition state-store open/commit/maintenance (32
-    * stores × 6 batches of file ops for a 150-key state), not by data —
-    * measured 2× on the sessionize gate and 2.5× on conversionLag at
-    * sf0.1 (9.4 → 5.2 s, 8.8 → 3.5 s medians). At production scale the
-    * knob RISES with the keyspace (state partitions bound stateful
-    * parallelism and per-store memory); it exists because the right
-    * number tracks the state's keyspace, not the batch engine's shuffle
-    * width. */
+    * [[StreamStatePartitions]] and AQE set to [[StreamBatchAQE]],
+    * restoring both previous values after, also when `body` throws.
+    *
+    * These are SESSION-GLOBAL SQLConf flips: every other query on the
+    * same `SparkSession` sees them while `body` runs. So this assumes
+    * one query at a time per `SparkSession`; ROADMAP direction 5
+    * replaces the flip with per-query settings. */
   private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key)
     val prevAqe = s.conf.get(aqeKey)
-    s.conf.set(key, s.conf.get("spark.graft.streamStatePartitions", "8"))
-    // AQE off for the per-batch sink bodies (r15, measured): a
-    // maintenance batch here is a LATENCY-bound sequence of small plans
-    // (screen → ledger write → fold write), and AQE turns every
-    // Exchange into its own materialized query stage — a separate job
-    // plus a driver re-optimization pause. JobProfile measured the
-    // dedup chain at 75 jobs/run with AQE vs 33 without (−1.8 s of a
-    // 7.9 s run; retune −1.2 s) with the 8-partition state width making
-    // coalescing moot. Parameterized: a production chain whose batches
-    // shuffle GBs wants it back on — set spark.graft.streamBatchAQE.
-    s.conf.set(aqeKey, s.conf.get("spark.graft.streamBatchAQE", "false"))
+    s.conf.set(key, StreamStatePartitions.toString)
+    s.conf.set(aqeKey, StreamBatchAQE.toString)
     try body finally {
       s.conf.set(key, prev)
       s.conf.set(aqeKey, prevAqe)
@@ -1630,8 +1638,7 @@ object StreamOps {
     * computed from the folded index in both engines, and
     * `StreamOpsSpec` drives the opposite branch (budget high → no swap)
     * to pin that the flag, not the schedule, is what acts. */
-  val StreamOccBudget: Double = graft.similarity.Similarity
-    .doubleKnob("GRAFT_STREAM_OCC_BUDGET", 1.0, 0.0, 1e9)
+  val StreamOccBudget: Double = 1.0
 
   /** The micro-batch after whose fold the in-stream maintenance check
     * runs (the swap, if flagged, lands in that batch's output version —
@@ -1819,8 +1826,7 @@ object StreamOps {
     * all flags the move — the seed quantizer's round-0 cells on this
     * corpus are far from uniform, so the corpus's own statistics demand
     * the retrain); `StreamOpsSpec` drives the opposite branch. */
-  val StreamCellBudget: Double = graft.similarity.Similarity
-    .doubleKnob("GRAFT_STREAM_CELL_BALANCE", 1.0, 0.0, 1e9)
+  val StreamCellBudget: Double = 1.0
 
   /** The micro-batch after whose fold the ANN maintenance check runs. */
   private[graft] val RetrainAfterBatch = 0L
@@ -2100,14 +2106,13 @@ object StreamOps {
 
   /** Occupancy target for the STREAMING resize chain's derived
     * quantizer size (k = ⌈n_vecs/occ⌉, [[graft.similarity.Similarity
-    * .derivedCellsFor]]): its own knob, not `GRAFT_IVF_TARGET_OCC`,
+    * .derivedCellsFor]]): its own constant, not `IvfTargetOcc`,
     * because the chain's gate needs the boundary crossing to land
     * MID-CHAIN on the gated corpora — at 64, the sf0.01 chain grows
     * k 7→8 on the batch-7 fold (404→452 vecs) and sf0.1 grows 26→29
     * (1604→1802), so the decision→action wiring is exercised at both
     * scales with genuinely different derived sizes. */
-  val StreamTargetOcc: Int = graft.similarity.Similarity
-    .intKnob("GRAFT_STREAM_TARGET_OCC", 64, 1, 1 << 30)
+  val StreamTargetOcc: Int = 64
 
   /** The micro-batch after whose fold the SIZE check consumes the
     * derivation (the scheduled maintenance slot — the family's

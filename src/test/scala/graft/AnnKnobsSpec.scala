@@ -4,60 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.similarity.Similarity
 
-/** The ANN tuning surface (VERDICT r5 #5): the LSH/IVF shape constants
-  * are env/property-driven knobs with the historical values as defaults.
-  * The oracle-gated queries already pin RESULTS at the defaults (any
-  * default drift hash-mismatches 151 gates); this spec pins the knob
-  * plumbing itself — defaults, override channel, validation. */
+/** The ANN shape constants (VERDICT r5 #5). The oracle-gated queries
+  * already pin RESULTS at these values (any drift hash-mismatches 151
+  * gates); this spec pins the values themselves and their mutual
+  * consistency. */
 class AnnKnobsSpec extends AnyFunSuite {
 
-  private val knobEnvs = Seq("GRAFT_LSH_BANDS", "GRAFT_LSH_PLANES_PER_BAND",
-    "GRAFT_IVF_CELLS", "GRAFT_IVF_NPROBE", "GRAFT_IVF_TARGET_OCC")
-
   test("defaults are the documented historical values") {
-    // only meaningful when the test JVM runs unconfigured (the normal case)
-    assume(knobEnvs.forall(e => sys.env.get(e).isEmpty && sys.props.get(e).isEmpty))
     assert(Similarity.Bands == 4)
     assert(Similarity.PlanesPerBand == 8)
     assert(Similarity.IvfCells == 16)
     assert(Similarity.IvfProbe == 2)
     assert(Similarity.IvfTargetOcc == 128)
-  }
-
-  test("system property overrides the default") {
-    val name = "GRAFT_TEST_KNOB_PROP"
-    sys.props(name) = "24"
-    try assert(Similarity.intKnob(name, 7, 1, 100) == 24)
-    finally sys.props.remove(name)
-    assert(Similarity.intKnob(name, 7, 1, 100) == 7)
-  }
-
-  test("out-of-range and non-integer settings fail fast at init, not mid-query") {
-    val name = "GRAFT_TEST_KNOB_BAD"
-    sys.props(name) = "0"
-    try intercept[IllegalArgumentException](Similarity.intKnob(name, 7, 1, 100))
-    finally sys.props.remove(name)
-    sys.props(name) = "not-a-number"
-    try intercept[IllegalArgumentException](Similarity.intKnob(name, 7, 1, 100))
-    finally sys.props.remove(name)
-  }
-
-  test("double knob: default, override channel, validation (ADVICE r7 #2)") {
-    assume(sys.env.get("GRAFT_NEAR_DUP_COS").isEmpty &&
-      sys.props.get("GRAFT_NEAR_DUP_COS").isEmpty)
     assert(Similarity.NearDupCos == 0.40)
-    val name = "GRAFT_TEST_KNOB_DBL"
-    sys.props(name) = "0.95"
-    try assert(Similarity.doubleKnob(name, 0.4, -1.0, 1.0) == 0.95)
-    finally sys.props.remove(name)
-    sys.props(name) = "1.5"
-    try intercept[IllegalArgumentException](
-      Similarity.doubleKnob(name, 0.4, -1.0, 1.0))
-    finally sys.props.remove(name)
-    sys.props(name) = "not-a-double"
-    try intercept[IllegalArgumentException](
-      Similarity.doubleKnob(name, 0.4, -1.0, 1.0))
-    finally sys.props.remove(name)
   }
 
   test("plane table and shift widths stay consistent with the knob values") {
@@ -71,9 +30,9 @@ class AnnKnobsSpec extends AnyFunSuite {
 
   test("Lloyd-trained probe width clamps to the trained cell count " +
     "(ADVICE r11)") {
-    // GRAFT_IVF_NPROBE validates against IvfCells (16), but the trained
-    // quantizer has LloydK = 8 cells; the effective width on
-    // Lloyd-backed queries is the explicit clamp, not a silent no-op
+    // IvfProbe is bounded by IvfCells (16), but the trained quantizer
+    // has LloydK = 8 cells; the effective width on Lloyd-backed queries
+    // is the explicit clamp, not a silent no-op
     assert(Similarity.LloydProbe ==
       math.min(Similarity.IvfProbe, 8))
     assert(Similarity.LloydProbe <= 8)

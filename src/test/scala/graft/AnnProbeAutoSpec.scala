@@ -9,8 +9,8 @@ import graft.tools.ClusteredEmbFixture
 /** The statistics-derived nprobe (r14, VERDICT r13 next #1): the probe
   * width is calibrated from a bounded probe sample — max over (sample
   * query, true neighbor) pairs of the rank the neighbor's cell holds in
-  * the query's anchor ranking — instead of the `GRAFT_IVF_NPROBE` hand
-  * knob. The oracle-gated queries pin the derivation and the serve at
+  * the query's anchor ranking — instead of the fixed `IvfProbe`
+  * width. The oracle-gated queries pin the derivation and the serve at
   * sf0.01; this spec pins the behavior the derivation exists FOR:
   * on clustered geometry it stays narrow, on held-out queries the
   * derived width still serves, and the clamp arithmetic holds. */
@@ -46,7 +46,7 @@ class AnnProbeAutoSpec extends AnyFunSuite with SparkSpec {
     // 10k vecs / occ 128 → 79 derived cells; each subgroup holds 100
     // near-dups spread over ~1 cell's worth of geometry, so the sample
     // finds its siblings within a few sister cells — the width the r13
-    // study had to HAND-SET via GRAFT_IVF_NPROBE at the 25× octave
+    // study had to HAND-SET via the probe width at the 25× octave
     val dir = "target/clustered-emb-scaled-probe"
     ClusteredEmbFixture.writeScaled(spark, dir, members = 100)
     val cells = Similarity.derivedIvfCells(spark, dir)

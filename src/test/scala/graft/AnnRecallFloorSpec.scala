@@ -25,9 +25,9 @@ import graft.tools.ClusteredEmbFixture
   *     near-dup subgroups → planted mislabeled bridge points, the
   *     geometry real encoder corpora have. EVERY tier clears 19/30
   *     here (ivf/multiprobe/hard_neg are perfect), so each floor has
-  *     real teeth: `GRAFT_IVF_NPROBE=1` drops the ivf-family tiers on
+  *     real teeth: `IvfProbe = 1` drops the ivf-family tiers on
   *     both corpora and fails this spec while the oracle gate stays
-  *     green (both sides interpolate the knob).
+  *     green (both sides interpolate the value).
   *
   * The floors are the exact measured values at the r9 defaults
   * (Bands=4, PlanesPerBand=8, IvfCells=16, IvfProbe=2) — everything is
@@ -64,11 +64,9 @@ class AnnRecallFloorSpec extends SparkSpec {
     "lsh" -> 29L,
     "multiprobe" -> 30L)
 
-  // Deliberately NO assume() on the knob env vars: the whole point is
-  // that a knob setting (or default change) that degrades recall FAILS
-  // here — a guard that cancels under set knobs would skip the tripwire
-  // in exactly the scenario it exists for. Retuning knobs on purpose
-  // means re-pinning these floors in the same change.
+  // A change to the shape constants that degrades recall FAILS here.
+  // Retuning them on purpose means re-pinning these floors in the same
+  // change.
   private def checkFloors(dir: String, floors: Map[String, Long],
       corpus: String): Unit = {
     val rows = Similarity.qAnnRecall.fn(spark, dir)
@@ -100,7 +98,7 @@ class AnnRecallFloorSpec extends SparkSpec {
   test("auto-sized IVF lands exactly on the incumbent where the constant " +
     "was tuned, and sizes from the corpus where it wasn't") {
     // at the bench corpus (2,000 vecs, target_occ 128) the derivation
-    // says 16 = GRAFT_IVF_CELLS, so the auto tier must serve
+    // says 16 = IvfCells, so the auto tier must serve
     // ROW-IDENTICAL results to the fixed tier — the knob change is
     // observable only at scales where the constant is wrong
     val byName = Similarity.all.map(q => q.name -> q).toMap

@@ -1382,21 +1382,37 @@ class StreamOpsSpec extends SparkSpec {
       new java.io.File("/tmp").list().toSet
         .filter(n => n.startsWith("graft_merge_state_") ||
           n.startsWith("graft_merge_ckpt_"))
-    val before = scratch()
-    val merged = StreamOps.qStreamMerge.fn(spark, sf001)
-    assert(merged.count() > 0)          // result survives the cleanup
-    assert(scratch() == before,
-      s"leaked: ${(scratch() -- before).mkString(",")}")
-    val bucketed = StreamOps.qStreamMergeBucketed.fn(spark, sf001)
-    assert(bucketed.count() > 0)
-    assert(scratch() == before)
-    // both paths agree with each other (same oracle)
-    assert(merged.collect().map(_.toString).sorted
-      .sameElements(bucketed.collect().map(_.toString).sorted))
-    val viewsBefore = spark.catalog.listTables().count()
-    assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
-    assert(spark.catalog.listTables().count() == viewsBefore,
-      "memory-sink temp view leaked")
+    // the streaming queries flip the session's shuffle width and AQE
+    // while they run (withStatePartitions) and must put both back:
+    // sentinels the flip never sets (it sets 8 partitions, AQE off)
+    val partsKey = "spark.sql.shuffle.partitions"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val (specParts, specAqe) = (spark.conf.get(partsKey),
+      spark.conf.get(aqeKey))
+    spark.conf.set(partsKey, "13")
+    spark.conf.set(aqeKey, "true")
+    try {
+      val before = scratch()
+      val merged = StreamOps.qStreamMerge.fn(spark, sf001)
+      assert(merged.count() > 0)          // result survives the cleanup
+      assert(scratch() == before,
+        s"leaked: ${(scratch() -- before).mkString(",")}")
+      val bucketed = StreamOps.qStreamMergeBucketed.fn(spark, sf001)
+      assert(bucketed.count() > 0)
+      assert(scratch() == before)
+      // both paths agree with each other (same oracle)
+      assert(merged.collect().map(_.toString).sorted
+        .sameElements(bucketed.collect().map(_.toString).sorted))
+      val viewsBefore = spark.catalog.listTables().count()
+      assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
+      assert(spark.catalog.listTables().count() == viewsBefore,
+        "memory-sink temp view leaked")
+      assert(spark.conf.get(partsKey) == "13", "shuffle width not restored")
+      assert(spark.conf.get(aqeKey) == "true", "AQE not restored")
+    } finally {
+      spark.conf.set(partsKey, specParts)
+      spark.conf.set(aqeKey, specAqe)
+    }
   }
 
   test("streamed micro-batch: the foreachBatch frame carries no file " +
